@@ -343,12 +343,17 @@ FROM events GROUP BY 1, 2
 
 
 def q_v_tags(spark, sf):
-    from osm_pt_validator_spark.operators.tags import validate_re_tags
+    from osm_pt_validator_spark.operators.set_stages import (
+        explode_verdicts,
+        re_tag_verdicts,
+    )
 
     rels = _mk_relations(
         spark, [(rid, 1, [], tags) for rid, tags in V_TAG_RELS.items()]
     )
-    return validate_re_tags(rels).select("relation_id", "url", "message")
+    return explode_verdicts(rels, re_tag_verdicts()).select(
+        "relation_id", "url", "message"
+    )
 
 
 SQL_V_TAGS = f"""
@@ -401,10 +406,15 @@ def _rels_from_members(spark, rows, tags_by_rel=None):
 
 
 def q_v_member_order(spark, sf):
-    from osm_pt_validator_spark.operators.member_order import validate_member_order
+    from osm_pt_validator_spark.operators.set_stages import (
+        explode_verdicts,
+        member_order_verdicts,
+    )
 
     rels = _rels_from_members(spark, V_MEMBERS)
-    return validate_member_order(rels).select("relation_id", "url", "message")
+    return explode_verdicts(rels, member_order_verdicts()).select(
+        "relation_id", "url", "message"
+    )
 
 
 _STOPLIKE_SQL = ("role IN ('stop','stop_entry_only','stop_exit_only',"
@@ -444,10 +454,13 @@ FROM (SELECT * FROM per_member WHERE message IS NOT NULL UNION ALL SELECT * FROM
 
 
 def q_v_node_count(spark, sf):
-    from osm_pt_validator_spark.operators.node_count import validate_node_count
+    from osm_pt_validator_spark.operators.set_stages import (
+        explode_verdicts,
+        node_count_verdicts,
+    )
 
     rels = _rels_from_members(spark, V_COUNT_MEMBERS)
-    return validate_node_count(rels, minimum_node_members=1).select(
+    return explode_verdicts(rels, node_count_verdicts(1)).select(
         "relation_id", "url", "message"
     )
 

@@ -57,17 +57,6 @@ def stop_node_tags(node_id: int) -> dict[str, str]:
     return {"public_transport": "stop_position", "bus": "yes", "name": f"Stop {node_id}"}
 
 
-def platform_node_tags(node_id: int) -> dict[str, str]:
-    """Tags making a node a fully valid platform (nodes.go:44-76),
-    including the NaPTAN code required when naptan_platform_tags=true."""
-    return {
-        "public_transport": "platform",
-        "highway": "bus_stop",
-        "name": f"Platform {node_id}",
-        "naptan:AtcoCode": f"636{node_id:06d}",
-    }
-
-
 def node_rows(extra: list[tuple[int, dict[str, str]]] | None = None) -> list[tuple]:
     """nodes table rows: all network nodes as valid stops, plus extras
     (node_id, tags) appended/overriding."""

@@ -20,13 +20,17 @@ ROLE_STOPS = ("stop", "stop_entry_only", "stop_exit_only")
 ROLE_PLATFORMS = ("platform", "platform_entry_only", "platform_exit_only")
 ROLES_STOPLIKE = ROLE_STOPS + ROLE_PLATFORMS
 
+#: printf-style, so ``ELEMENT_URL % (type, id)`` renders the same URL
+#: in plain Python as ``element_url`` does in a plan
+ELEMENT_URL = "https://www.openstreetmap.org/%s/%d"
+
 
 def element_url(elem_type: Column | str, ref: Column | str) -> Column:
     """Canonical OSM element URL; must be byte-identical to the
     reference's ``fmt.Sprintf`` so verdicts compare byte-equal."""
     t = F.col(elem_type) if isinstance(elem_type, str) else elem_type
     r = F.col(ref) if isinstance(ref, str) else ref
-    return F.format_string("https://www.openstreetmap.org/%s/%d", t, r)
+    return F.format_string(ELEMENT_URL, t, r)
 
 
 def render_verdict(message: Column | str, url: Column | str) -> Column:

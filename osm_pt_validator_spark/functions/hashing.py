@@ -25,9 +25,3 @@ def md5_i64_sql(expr: str, salt: str = "") -> str:
     """The DuckDB-side rendering of md5_i64 for oracle queries."""
     src = f"'{salt}' || {expr}" if salt else expr
     return f"('0x' || substr(md5({src}), 1, 15))::BIGINT"
-
-
-def minhash_salt(m: int) -> str:
-    """Salt for the m-th minhash function — H independent md5-derived
-    hash functions replace the classic (a*x+b) mod p family."""
-    return f"mh{m}|"

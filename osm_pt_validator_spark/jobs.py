@@ -88,13 +88,17 @@ def main(argv: list[str] | None = None) -> int:
     else:
         work_sets.append((DEFAULT_CONFIG, relations))
 
+    # validate_all fans each work set into several branches (routes /
+    # masters / unknown / master-member join) — persist the FILTERED
+    # subset so it is computed once, not once per branch. Persisting
+    # the raw relations table instead would cache the whole table on
+    # a --relation-id run AND put a cache barrier in front of the
+    # parquet scan, blocking predicate pushdown of the work filter.
+    work_sets = [
+        (cfg, rels.persist(StorageLevel.MEMORY_AND_DISK)) for cfg, rels in work_sets
+    ]
+
     def _validate():
-        # validate_all fans each work set into several branches (routes /
-        # masters / unknown / master-member join) — persist the FILTERED
-        # subset so it is computed once, not once per branch. Persisting
-        # the raw relations table instead would cache the whole table on
-        # a --relation-id run AND put a cache barrier in front of the
-        # parquet scan, blocking predicate pushdown of the work filter.
         # gone_handled: a work-list id that is missing AND a member of a
         # present route master would otherwise get "relation no longer
         # exists" twice — once from the jobs-level gone set above and
@@ -102,13 +106,7 @@ def main(argv: list[str] | None = None) -> int:
         # supplies its own gone verdicts, so validate_all excludes the
         # work-list ids from its master-member gone.
         parts = [
-            validate_all(
-                rels.persist(StorageLevel.MEMORY_AND_DISK),
-                nodes,
-                ways,
-                cfg,
-                gone_handled=gone_handled,
-            )[0]
+            validate_all(rels, nodes, ways, cfg, gone_handled=gone_handled)[0]
             for cfg, rels in work_sets
         ]
         if gone is not None:
@@ -118,7 +116,13 @@ def main(argv: list[str] | None = None) -> int:
             out = out.unionByName(p)
         return out
 
-    verdicts = run_stage(spark, args.out, "verdicts", _validate)
+    try:
+        verdicts = run_stage(spark, args.out, "verdicts", _validate)
+    finally:
+        # verdicts is the checkpoint's parquet re-read: nothing reads the
+        # work-set cache from here on
+        for _, rels in work_sets:
+            rels.unpersist()
     run_stage(spark, args.out, "invalid_relations", lambda: collect_invalid(verdicts))
 
     n = verdicts.count()

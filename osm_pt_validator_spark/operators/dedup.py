@@ -138,12 +138,6 @@ def minhash_signature_from_hashes(hs: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """Signature straight from text — convenience for single-use plans;
-    prefer the two-step shingle-hash/signature split in hot paths."""
-    return minhash_signature_from_hashes(shingle_hashes(text, shingle_n), num_hashes)
-
-
 def _pair_structs(ids_col: str = "ids"):
     """(doc_a < doc_b) struct pairs expanded from a sorted id array —
     shared by every in-bucket candidate generator (LSH bands, SimHash
@@ -366,12 +360,6 @@ def make_simhash_udf(bits: int = 64):
         return pd.Series(sig.astype(np.int64))
 
     return simhash
-
-
-def _simple_tokens(t: str) -> list[str]:
-    import re
-
-    return [w for w in re.split(r"[^a-zA-Z0-9']+", t.lower()) if w]
 
 
 def simhash_near_duplicates(

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osm_pt_validator_spark.functions.elements import (
+    element_url,
     is_platform_role,
     is_stop_role,
 )
@@ -117,7 +118,7 @@ def validate_relation_nodes(
     verdicts are discarded by the reference).
     """
     j = _checked_node_members(members, nodes).filter(F.col("node_id").isNotNull())
-    url = F.format_string("https://www.openstreetmap.org/node/%d", F.col("ref"))
+    url = element_url(F.lit("node"), "ref")
     tags = F.col("tags")
 
     def pad(checks: list[Column]) -> Column:

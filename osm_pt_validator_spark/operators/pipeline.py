@@ -14,11 +14,11 @@ Stage order and gating (all load-bearing for verdict parity):
      verdicts), inside one Arrow-batched per-relation pass.
   7. node-member count (route_relation.go:43-46).
 
-Scale notes: stages 0-2 and 7 are pure projections over the relations
-table (no shuffle). Stage 3 is one hash join against the nodes dim.
-Stages 4-6 are one shuffle on relation_id + one Arrow hop. Verdict
-order inside a relation is reconstructed by sorting on
-(stage_no, seq) — deterministic across any partitioning.
+Scale notes: stages 0-2 and 7 are one projection over the relations
+table (operators/set_stages.py, no shuffle). Stage 3 is one hash join
+against the nodes dim. Stages 4-6 are one shuffle on relation_id + one
+Arrow hop. Verdict order inside a relation is reconstructed by sorting
+on (stage_no, seq) — deterministic across any partitioning.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_pt_validator_spark.config import DEFAULT_CONFIG, ValidationConfig
-from osm_pt_validator_spark.functions.elements import is_ptv2
+from osm_pt_validator_spark.functions.elements import element_url, is_ptv2
 from osm_pt_validator_spark.operators.node_checks import (
     missing_node_errors,
     validate_relation_nodes,
@@ -40,9 +40,7 @@ from osm_pt_validator_spark.operators.way_order import (
     STAGE_ENGINE_ERROR,
     validate_way_and_stop_order,
 )
-from osm_pt_validator_spark.schemas import STAGE_NODE_COUNT, STAGE_PTV2
-
-MSG_PTV2 = "tag 'public_transport:version' should have value '2'"
+from osm_pt_validator_spark.schemas import STAGE_NODE_COUNT
 
 
 def explode_members(relations: DataFrame) -> DataFrame:
@@ -221,8 +219,6 @@ def collect_invalid(verdicts: DataFrame) -> DataFrame:
         )
         .withColumn(
             "relation_url",
-            F.format_string(
-                "https://www.openstreetmap.org/relation/%d", F.col("relation_id")
-            ),
+            element_url(F.lit("relation"), "relation_id"),
         )
     )

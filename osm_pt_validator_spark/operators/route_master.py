@@ -11,9 +11,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_pt_validator_spark.operators.tags import (
+from osm_pt_validator_spark.operators.set_stages import (
+    FLAG_SEQ_BASE,
     RM_REQUIRED_TAGS,
-    missing_tag_checks,
+    explode_verdicts,
+    fired_verdicts,
+    member_verdicts,
+    no_verdicts,
+    relation_url,
+    tag_messages,
 )
 
 #: route-master verdicts use their own single stage (the reference has
@@ -23,52 +29,31 @@ STAGE_MASTER = 0
 MSG_NOT_RELATION = "member is not a relation"
 MSG_NOT_ENOUGH_VARIANTS = "not enough route variants"
 
-_TAIL_SEQ = 1_000_000_000
-
 
 def validate_route_masters(
     relations: DataFrame, minimum_route_variants: int
 ) -> DataFrame:
-    rel_url = F.format_string(
-        "https://www.openstreetmap.org/relation/%d", F.col("relation_id")
+    not_relation = member_verdicts(
+        STAGE_MASTER,
+        lambda m: F.when(m["type"] != "relation", F.lit(MSG_NOT_RELATION)),
     )
-
-    m = relations.select(
-        "relation_id", F.posexplode("members").alias("member_idx", "m")
-    )
-    member_verdicts = m.filter(F.col("m.type") != "relation").select(
-        "relation_id",
-        F.lit(STAGE_MASTER).alias("stage_no"),
-        F.col("member_idx").cast("long").alias("seq"),
-        F.format_string(
-            "https://www.openstreetmap.org/%s/%d", F.col("m.type"), F.col("m.ref")
-        ).alias("url"),
-        F.lit(MSG_NOT_RELATION).alias("message"),
-    )
-
-    rel_count = F.size(F.filter(F.col("members"), lambda x: x["type"] == "relation"))
-    tail_checks = []
+    tail = []
     if minimum_route_variants > 0:
-        tail_checks.append(
-            F.when(
-                rel_count < minimum_route_variants,
-                F.struct(
-                    rel_url.alias("url"), F.lit(MSG_NOT_ENOUGH_VARIANTS).alias("message")
-                ),
-            )
+        rel_count = F.size(
+            F.filter(F.col("members"), lambda m: m["type"] == "relation")
         )
-    tail_checks.extend(missing_tag_checks(F.col("tags"), rel_url, RM_REQUIRED_TAGS))
-    tail_arr = F.filter(F.array(*tail_checks), lambda v: v.isNotNull())
-    tail_verdicts = relations.select(
-        "relation_id", F.posexplode(tail_arr).alias("i", "v")
-    ).select(
-        "relation_id",
-        F.lit(STAGE_MASTER).alias("stage_no"),
-        (F.lit(_TAIL_SEQ) + F.col("i")).alias("seq"),
-        F.col("v.url").alias("url"),
-        F.col("v.message").alias("message"),
+        tail.append(
+            F.when(rel_count < minimum_route_variants, F.lit(MSG_NOT_ENOUGH_VARIANTS))
+        )
+    tail.extend(tag_messages(F.col("tags"), RM_REQUIRED_TAGS))
+    return explode_verdicts(
+        relations,
+        F.concat(
+            # a NULL members array still gets the relation-level checks
+            F.coalesce(not_relation, no_verdicts()),
+            fired_verdicts(STAGE_MASTER, relation_url(), tail, seq_base=FLAG_SEQ_BASE),
+        ),
     )
-    return member_verdicts.unionByName(tail_verdicts)
 
 
 def split_route_master_members(route_masters: DataFrame) -> DataFrame:

@@ -31,11 +31,15 @@ from __future__ import annotations
 from collections.abc import Iterable, Sequence
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from osm_pt_validator_spark.functions.elements import is_stop_role, oneway_tag
+from osm_pt_validator_spark.functions.elements import (
+    ELEMENT_URL,
+    is_stop_role,
+    oneway_tag,
+)
 from osm_pt_validator_spark.schemas import (
     STAGE_ONEWAY,
     STAGE_STOP_ORDER,
@@ -55,11 +59,11 @@ MSG_STOP_BAD_ORDER = "stop is incorrectly ordered"
 
 
 def _way_url(way_id: int) -> str:
-    return f"https://www.openstreetmap.org/way/{way_id}"
+    return ELEMENT_URL % ("way", way_id)
 
 
 def _node_url(node_id: int) -> str:
-    return f"https://www.openstreetmap.org/node/{node_id}"
+    return ELEMENT_URL % ("node", node_id)
 
 
 # ---------------------------------------------------------------------------
@@ -440,8 +444,3 @@ def cheap_gap_prefilter(members: DataFrame, ways: DataFrame) -> DataFrame:
         .groupBy("relation_id")
         .agg(F.max("maybe_gap").alias("maybe_gap"))
     )
-
-
-def oneway_tag_col(tags: Column) -> Column:
-    """Re-export for callers composing the detail frame themselves."""
-    return oneway_tag(tags)

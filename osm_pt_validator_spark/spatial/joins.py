@@ -182,8 +182,9 @@ def distance_join(
     * longitude: a cell's WIDTH in meters shrinks with cos(lat), so the
       j-ring must widen per row — computed from the worst-case latitude
       the pair can reach (|row lat| + the distance budget in degrees),
-      clamped at 85°. Polar-cap data (|lat| > 85°) is outside the
-      recall contract — use a coarser ``res`` there.
+      clamped at 85°, and wraps at the antimeridian. Polar-cap data
+      (|lat| > 85°) is outside the recall contract — use a coarser
+      ``res`` there.
 
     The per-row j-ring is also the skew story: equatorial rows fan out
     to 3 cells, arctic rows to more — paying the fan-out only where
@@ -217,11 +218,15 @@ def distance_join(
             ),
         )
     )
-    in_grid = F.filter(
-        pairs,
-        lambda p: (p["i"] >= 0) & (p["i"] < n) & (p["j"] >= 0) & (p["j"] < n),
+    in_grid = F.filter(pairs, lambda p: (p["i"] >= 0) & (p["i"] < n))
+    # longitude wraps at the antimeridian; a j-ring wider than the grid
+    # would reach a column twice
+    cells = F.array_distinct(
+        F.transform(
+            in_grid,
+            lambda p: F.shiftleft(p["i"], 32).bitwiseOR(F.pmod(p["j"], F.lit(n))),
+        )
     )
-    cells = F.transform(in_grid, lambda p: F.shiftleft(p["i"], 32).bitwiseOR(p["j"]))
     lf = left.withColumn("__cell", F.explode(cells))
 
     renames = {c: (c + "_r" if c in left.columns else c) for c in right.columns}

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 # -- pure parser: WARC scanner never loses a well-formed record --------------
@@ -100,6 +100,7 @@ def _hav(lat1, lon1, lat2, lon2):
 
 
 @given(_pts, _pts, st.sampled_from([500.0, 5000.0, 50000.0]))
+@example(left=[(82.0, 178.0)], right=[(82.0, -179.0)], d=50000.0)  # antimeridian
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 def test_distance_join_recall_property(spark, left, right, d):
     from osm_pt_validator_spark.spatial.joins import distance_join
@@ -320,3 +321,104 @@ def test_session_stats_matches_python_replay(spark, events):
             )
         )
     assert got == sorted(want)
+
+
+# -- stages 0/1/2/7 against a replay of the reference's sequential checks ----
+
+_STOPLIKE = {
+    "stop", "stop_entry_only", "stop_exit_only",
+    "platform", "platform_entry_only", "platform_exit_only",
+}
+_member = st.tuples(
+    st.sampled_from(["node", "way", "relation"]),
+    st.integers(1, 99),
+    st.sampled_from(sorted(_STOPLIKE) + ["", "forward", "backward", "bogus"]),
+)
+# per key: absent (None), the required value, or a wrong value
+_tag_choice = {
+    "from": st.sampled_from([None, "A"]),
+    "to": st.sampled_from([None, "B"]),
+    "name": st.sampled_from([None, "N"]),
+    "operator": st.sampled_from([None, "Op"]),
+    "ref": st.sampled_from([None, "7"]),
+    "type": st.sampled_from([None, "route", "route_master"]),
+    "public_transport:version": st.sampled_from(["2", "2", "2", None, "1"]),
+}
+_relation = st.tuples(
+    st.lists(_member, max_size=7),
+    st.fixed_dictionaries(_tag_choice).map(
+        lambda d: {k: v for k, v in d.items() if v is not None}
+    ),
+)
+
+
+def _replay_route_relation(rid, members, tags, minimum_node_members):
+    """validateRouteRelation stages 0/1/2/7 (route_relation.go:10-48,
+    tags.go:5-29, node_count.go:7-21) as the reference runs them: one
+    sequential pass per stage, verdicts appended in emission order."""
+    rel_url = f"https://www.openstreetmap.org/relation/{rid}"
+    if tags.get("public_transport:version") != "2":
+        return [(rid, 0, 0, rel_url,
+                 "tag 'public_transport:version' should have value '2'")]
+    out = []
+    s1 = [f"missing tag '{k}'" for k in ("from", "to", "name", "operator", "ref")
+          if k not in tags]
+    for k, want in (("type", "route"), ("public_transport:version", "2")):
+        if k not in tags:
+            s1.append(f"missing tag '{k}'")
+        elif tags[k] != want:
+            s1.append(f"tag '{k}' should have value '{want}'")
+    out += [(rid, 1, i, rel_url, m) for i, m in enumerate(s1)]
+
+    started_stops = started_route = route_before = stop_after = False
+    for i, (typ, ref, role) in enumerate(members):
+        url = f"https://www.openstreetmap.org/{typ}/{ref}"
+        if role in _STOPLIKE:
+            stop_after |= started_route
+            started_stops = True
+        else:
+            route_before |= not started_stops
+            started_route = True
+        if typ == "node" and role == "":
+            out.append((rid, 2, i, url, "stop/platform with empty role"))
+        elif role != "" and role not in _STOPLIKE:
+            out.append((rid, 2, i, url, f"element has unexpected role '{role}'"))
+    flags = [
+        msg for fired, msg in (
+            (route_before, "route way appears before stop/platform"),
+            (stop_after, "stop/platform appears after route ways"),
+            (not started_stops, "route does not contain a stop/platform"),
+            (not started_route, "route does not contain any route ways"),
+        ) if fired
+    ]
+    out += [(rid, 2, 1_000_000_000 + i, "", m) for i, m in enumerate(flags)]
+
+    n_nodes = sum(1 for typ, _, _ in members if typ == "node")
+    if minimum_node_members >= 1 and n_nodes < minimum_node_members:
+        out.append((rid, 7, 0, rel_url, "relation does not have enough node members"))
+    return out
+
+
+@given(st.lists(_relation, min_size=1, max_size=12), st.sampled_from([0, 1, 3]))
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+def test_set_based_verdicts_match_sequential_replay(spark, rels, minimum_node_members):
+    """The fused stage 0/1/2/7 pass agrees with the reference's
+    sequential scans on every verdict column, stage_no and seq
+    included — the member-order flags in particular come from min/max
+    index algebra, not the scan."""
+    from osm_pt_validator_spark.config import ValidationConfig
+    from osm_pt_validator_spark.fixtures import relations_df
+    from osm_pt_validator_spark.operators.set_stages import set_based_verdicts
+
+    df = relations_df(
+        spark,
+        [(rid, 1, members, tags) for rid, (members, tags) in enumerate(rels, 1)],
+    )
+    cfg = ValidationConfig(minimum_node_members=minimum_node_members)
+    got = sorted(tuple(r) for r in set_based_verdicts(df, cfg).collect())
+    want = sorted(
+        v
+        for rid, (members, tags) in enumerate(rels, 1)
+        for v in _replay_route_relation(rid, members, tags, minimum_node_members)
+    )
+    assert got == want

@@ -424,3 +424,26 @@ def test_job_gone_worklist_id_also_master_member_single_verdict(spark, tmp_path)
     assert [(r.relation_id, r.message) for r in gone_rows] == [
         (404404, "relation no longer exists")
     ]
+
+
+def test_job_releases_persisted_work_sets(spark, tmp_path):
+    """jobs.main persists each work set for validate_all's branches; once
+    the verdicts stage is checkpointed nothing reads that cache, so a
+    finished job leaves the session's persisted-RDD count where it was."""
+    from osm_pt_validator_spark.fixtures import (
+        relation_row,
+        route_tags,
+        stop_members,
+        way_members,
+    )
+    from osm_pt_validator_spark.jobs import main
+
+    tables = tmp_path / "tables"
+    _write_tables(
+        spark, tables,
+        [relation_row(9001, stop_members(102, 104) + way_members(3, 4), route_tags())],
+    )
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    rc = main(["--tables", str(tables), "--out", str(tmp_path / "out"), "--cpus", "4"])
+    assert rc == 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
