@@ -1,14 +1,14 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 `entry(spark)` runs the flagship pipeline (pages -> extraction ->
-spatial join -> heatmap) on sf0.001. `queries()` exposes one callable
-per implemented operator (SURVEY.md §2 + graft G-operators);
-`oracle_sql()` gives the DuckDB-replayable ANSI SQL for EVERY entry
-(identical column names & quantised numeric types so value hashes match
-bit-for-bit). Even the non-SQL-expressible operators are oracle'd: the
-frontier automaton family against golden VALUES transcribed from the
-reference's Go test expectations, the hash/sketch paths (SimHash, LSH,
-IVF, KMV, Bloom) by replaying the same md5-derived arithmetic in SQL.
+spatial join -> heatmap) on sf0.001. `CONTRACT`, at the end of this
+file, is the one place a key is added: key -> (Spark callable,
+DuckDB-replayable ANSI SQL with identical column names & quantised
+numeric types, so value hashes match bit-for-bit); `queries()` and
+`oracle_sql()` are read off it. Even the non-SQL-expressible operators
+are oracle'd: the frontier automaton family against golden VALUES
+transcribed from the reference's Go test expectations, the hash/sketch
+paths (SimHash, LSH, IVF, KMV, Bloom) by replaying md5 arithmetic in SQL.
 """
 
 from __future__ import annotations
@@ -2674,6 +2674,8 @@ FROM k
 
 
 BM25_TERMS = ["spark", "join", "fast", "window"]
+BM25_K1 = 1.2
+BM25_B = 0.75
 
 
 def q_bm25_scores(spark, sf):
@@ -2687,18 +2689,18 @@ def q_bm25_scores(spark, sf):
     from osm_pt_validator_spark.operators.text import bm25_scores
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
-    return bm25_scores(d, BM25_TERMS, k1=1.2, b=0.75).select(
+    return bm25_scores(d, BM25_TERMS, k1=BM25_K1, b=BM25_B).select(
         "doc_id",
         F.col("score_micro").cast("long").alias("score_micro"),
         "n_terms_hit",
     )
 
 
-def _sql_bm25_scores(k1: float = 1.2, b: float = 0.75) -> str:
+def _sql_bm25_scores() -> str:
     toks = _SQL_TOKENS.format(t="text")
     in_list = ", ".join(f"'{t}'" for t in BM25_TERMS)
-    k1p1 = repr(k1 + 1.0)
-    one_m_b = repr(1.0 - b)
+    k1p1 = repr(BM25_K1 + 1.0)
+    one_m_b = repr(1.0 - BM25_B)
     return f"""
 WITH d AS (SELECT doc_id, {toks} AS toks FROM documents),
 base AS (SELECT doc_id, len(toks) AS dl, t.tok AS t
@@ -2710,7 +2712,7 @@ st AS (SELECT COUNT(*) AS n_docs, SUM(len(toks)) AS sum_dl FROM d),
 s AS (SELECT tf.doc_id,
   CAST(round(
     ln(1.0 + (st.n_docs - dft.df + 0.5) / (dft.df + 0.5))
-    * ((tf.tf * {k1p1}) / (tf.tf + {repr(k1)} * ({one_m_b} + {repr(b)}
+    * ((tf.tf * {k1p1}) / (tf.tf + {BM25_K1!r} * ({one_m_b} + {BM25_B!r}
         * (tf.dl / (CAST(st.sum_dl AS DOUBLE) / st.n_docs)))))
     * 1e6) AS BIGINT) AS cm
   FROM tf JOIN dft USING (t), st)
@@ -2835,37 +2837,40 @@ SELECT ngram, COUNT(*) AS n FROM g GROUP BY 1 HAVING COUNT(*) >= 3
 """
 
 
+PASSAGE_WINDOW_TOKENS = 64
+PASSAGE_STRIDE = 32
+
+
 def q_passage_windows(spark, sf):
     """Retrieval chunking (text.passage_windows): overlapping 64-token
     windows at stride 32, final window pinned to the last token. Pure
     array algebra, map-only."""
     from osm_pt_validator_spark.operators.text import passage_windows
 
-    return passage_windows(
-        _t(spark, sf, "documents"), window_tokens=64, stride=32
-    )
+    d = _t(spark, sf, "documents")
+    return passage_windows(d, window_tokens=PASSAGE_WINDOW_TOKENS, stride=PASSAGE_STRIDE)
 
 
-def _sql_passage_windows(window_tokens: int = 64, stride: int = 32) -> str:
+def _sql_passage_windows() -> str:
     toks = _SQL_TOKENS.format(t="text")
     return f"""
 WITH d AS (SELECT doc_id, {toks} AS toks FROM documents),
 st AS (
   SELECT doc_id, toks,
-         GREATEST(1, len(toks) - {window_tokens - 1}) AS last_start
+         GREATEST(1, len(toks) - {PASSAGE_WINDOW_TOKENS - 1}) AS last_start
   FROM d WHERE len(toks) > 0),
 starts AS (
   SELECT doc_id, toks,
-    CASE WHEN (last_start - 1) % {stride} = 0
-         THEN range(1, last_start + 1, {stride})
-         ELSE list_append(range(1, last_start + 1, {stride}), last_start)
+    CASE WHEN (last_start - 1) % {PASSAGE_STRIDE} = 0
+         THEN range(1, last_start + 1, {PASSAGE_STRIDE})
+         ELSE list_append(range(1, last_start + 1, {PASSAGE_STRIDE}), last_start)
     END AS ss
   FROM st),
 w AS (
   SELECT doc_id, UNNEST(ss) AS start_tok, toks FROM starts),
 p AS (
   SELECT doc_id, start_tok,
-         toks[start_tok : start_tok + {window_tokens - 1}] AS win
+         toks[start_tok : start_tok + {PASSAGE_WINDOW_TOKENS - 1}] AS win
   FROM w)
 SELECT doc_id,
   CAST(row_number() OVER (PARTITION BY doc_id ORDER BY start_tok) - 1 AS INT)
@@ -2877,6 +2882,9 @@ FROM p WHERE len(win) > 0
 """
 
 
+JACCARD_THRESHOLD = 0.5
+
+
 def q_jaccard_join(spark, sf):
     """Exact set-similarity join (dedup.jaccard_similarity_join,
     PPJoin-style prefix filtering): lossless all-pairs Jaccard >= 0.5
@@ -2886,7 +2894,7 @@ def q_jaccard_join(spark, sf):
     from osm_pt_validator_spark.operators.dedup import jaccard_similarity_join
 
     return jaccard_similarity_join(
-        _t(spark, sf, "documents"), threshold=0.5
+        _t(spark, sf, "documents"), threshold=JACCARD_THRESHOLD
     ).select(
         "doc_a", "doc_b",
         F.col("inter_n").cast("int").alias("inter_n"),
@@ -2895,7 +2903,7 @@ def q_jaccard_join(spark, sf):
     )
 
 
-def _sql_jaccard_join(threshold: float = 0.5) -> str:
+def _sql_jaccard_join() -> str:
     toks = _SQL_TOKENS.format(t="text")
     # ground truth stays ALL pairs; the intersection is computed
     # relationally (explode -> equi-join -> count) instead of
@@ -2925,7 +2933,7 @@ SELECT doc_a, doc_b, CAST(inter_n AS INT) AS inter_n,
   CAST(union_n AS INT) AS union_n,
   CAST(round(CAST(inter_n AS DOUBLE) / CAST(union_n AS DOUBLE) * 1e6)
        AS BIGINT) AS jac_ppm
-FROM p WHERE CAST(inter_n AS DOUBLE) >= {threshold!r} * union_n
+FROM p WHERE CAST(inter_n AS DOUBLE) >= {JACCARD_THRESHOLD!r} * union_n
 """
 
 
@@ -3136,12 +3144,16 @@ def q_streaming_heatmap_replay(spark, sf):
 def _sql_streaming_heatmap_replay() -> str:
     lat = "(user_id % 1700) / 10.0 - 85.0"
     lon = "(event_id % 3600) / 10.0 - 180.0"
+    # F.window floors to the 6-hour window; DuckDB's `//` truncates toward
+    # zero, so floor with the non-negative mod, as SQL_FOCAL_HEATMAP does
     return f"""
-SELECT CAST(epoch_us(ts) // 21600000000 * 21600 AS BIGINT) AS window_epoch,
+WITH e AS (SELECT epoch_us(ts) AS us, user_id, event_id FROM events)
+SELECT CAST((us - ((us % 21600000000) + 21600000000) % 21600000000) // 1000000
+            AS BIGINT) AS window_epoch,
   {_sql_tile_x(lon, 7)} AS tile_x,
   {_sql_tile_y(lat, 7)} AS tile_y,
   CAST(COUNT(*) AS BIGINT) AS n
-FROM events GROUP BY 1, 2, 3
+FROM e GROUP BY 1, 2, 3
 """
 
 
@@ -3660,6 +3672,15 @@ FROM ranked WHERE rank <= 5
 """
 
 
+EMBED_DIM = 64  # width of every `embeddings` vector
+KMEANS_K = 4
+KMEANS_ITERS = 2
+PQ_M = 4
+PQ_K = 8
+PQ_TOPK = 5
+NUM_PLANES = 6  # hyperplane-LSH planes: 2^6 buckets
+
+
 def q_kmeans_centroids(spark, sf):
     """IVF index training (operators/kmeans.py): 2 Lloyd rounds, k=4,
     in fixed-point int64 — every add/multiply is integer-exact, so the
@@ -3669,7 +3690,7 @@ def q_kmeans_centroids(spark, sf):
     from osm_pt_validator_spark.operators.kmeans import kmeans_fixed_point
 
     e = _t(spark, sf, "embeddings")
-    cents, _assign = kmeans_fixed_point(e, k=4, iters=2)
+    cents, _assign = kmeans_fixed_point(e, k=KMEANS_K, iters=KMEANS_ITERS)
     return cents.select(
         F.col("cid").cast("int").alias("cid"),
         F.col("n").cast("long").alias("n"),
@@ -3677,21 +3698,21 @@ def q_kmeans_centroids(spark, sf):
     ).select("cid", "n", F.col("pos").cast("int").alias("pos"), "val")
 
 
-def _sql_kmeans_parts(dim: int = 64, k: int = 4, iters: int = 2) -> list:
+def _sql_kmeans_parts() -> list:
     """The Lloyd-round CTE chain shared by the kmeans_centroids oracle
     and every oracle that composes on its assignments (semdedup)."""
     dist = (
         "list_sum(list_transform(generate_series(1, {d}), "
         "i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i])))"
-    ).format(d=dim)
+    ).format(d=EMBED_DIM)
     parts = [
         "q AS (SELECT vec_id, list_transform(embedding, "
         "x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT)) AS qv "
         "FROM embeddings)",
         f"c0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, "
-        f"qv AS cv FROM q ORDER BY vec_id LIMIT {k})",
+        f"qv AS cv FROM q ORDER BY vec_id LIMIT {KMEANS_K})",
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, KMEANS_ITERS + 1):
         parts.append(
             f"a{t} AS (SELECT vec_id, cid, qv FROM ("
             f"SELECT q.vec_id, c.cid, q.qv, "
@@ -3701,7 +3722,7 @@ def _sql_kmeans_parts(dim: int = 64, k: int = 4, iters: int = 2) -> list:
         )
         parts.append(
             f"dim{t} AS (SELECT cid, i, qv[i] AS val FROM a{t} "
-            f"CROSS JOIN (SELECT unnest(generate_series(1, {dim})) AS i))"
+            f"CROSS JOIN (SELECT unnest(generate_series(1, {EMBED_DIM})) AS i))"
         )
         parts.append(
             f"c{t} AS (SELECT cid, MIN(n) AS n, list(cval ORDER BY i) AS cv FROM ("
@@ -3711,13 +3732,12 @@ def _sql_kmeans_parts(dim: int = 64, k: int = 4, iters: int = 2) -> list:
     return parts
 
 
-def _sql_kmeans(dim: int = 64, k: int = 4, iters: int = 2) -> str:
-    parts = _sql_kmeans_parts(dim, k, iters)
+def _sql_kmeans() -> str:
     return (
-        "WITH " + ",\n".join(parts)
+        "WITH " + ",\n".join(_sql_kmeans_parts())
         + f"\nSELECT CAST(cid AS INT) AS cid, CAST(n AS BIGINT) AS n, "
         f"CAST(i - 1 AS INT) AS pos, cv[i] AS val "
-        f"FROM c{iters} CROSS JOIN (SELECT unnest(generate_series(1, {dim})) AS i)"
+        f"FROM c{KMEANS_ITERS} CROSS JOIN (SELECT unnest(generate_series(1, {EMBED_DIM})) AS i)"
     )
 
 
@@ -3732,11 +3752,10 @@ def q_semantic_dedup(spark, sf):
     from osm_pt_validator_spark.operators.similarity import semantic_dedup
 
     e = _t(spark, sf, "embeddings")
-    return semantic_dedup(e, k=4, iters=2, threshold=0.35)
+    return semantic_dedup(e, k=KMEANS_K, iters=KMEANS_ITERS, threshold=0.35)
 
 
-def _sql_semantic_dedup(dim: int = 64, k: int = 4, iters: int = 2) -> str:
-    parts = _sql_kmeans_parts(dim, k, iters)
+def _sql_semantic_dedup() -> str:
     cos = (
         "round(CASE WHEN sqrt(list_dot_product(a.v, a.v)) * "
         "sqrt(list_dot_product(b.v, b.v)) > 0 "
@@ -3745,8 +3764,8 @@ def _sql_semantic_dedup(dim: int = 64, k: int = 4, iters: int = 2) -> str:
         "ELSE 0.0 END, 6)"
     )
     return (
-        "WITH " + ",\n".join(parts) + f""",
-asg AS (SELECT vec_id, cid FROM a{iters}),
+        "WITH " + ",\n".join(_sql_kmeans_parts()) + f""",
+asg AS (SELECT vec_id, cid FROM a{KMEANS_ITERS}),
 ev AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
        FROM embeddings),
 m AS (SELECT asg.vec_id, asg.cid, ev.v FROM asg JOIN ev USING (vec_id)),
@@ -3772,15 +3791,15 @@ def q_pq_ann_topk(spark, sf):
     queries = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    cb = pq_train(e, m=4, k=8, iters=1)
-    return pq_adc_topk(e, queries, cb, k=5, m=4)
+    cb = pq_train(e, m=PQ_M, k=PQ_K, iters=1)
+    return pq_adc_topk(e, queries, cb, k=PQ_TOPK, m=PQ_M)
 
 
-def _sql_pq(dim: int = 64, m: int = 4, k: int = 8, topk: int = 5) -> str:
+def _sql_pq() -> str:
     """Replays pq_train (1 Lloyd round per subspace), pq_encode
     (argmin with ties on cid) and pq_adc_topk (LUT sum) in DuckDB —
     all integer arithmetic, bit-identical to the Spark plan."""
-    ds = dim // m
+    ds = EMBED_DIM // PQ_M
 
     def dist(a, b):
         return (
@@ -3792,10 +3811,10 @@ def _sql_pq(dim: int = 64, m: int = 4, k: int = 8, topk: int = 5) -> str:
 WITH q AS (SELECT vec_id, list_transform(embedding,
     x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT)) AS qv FROM embeddings),
 sub AS (SELECT vec_id, j AS m, list_slice(qv, j * {ds} + 1, (j + 1) * {ds}) AS sv
-    FROM q CROSS JOIN (SELECT unnest(generate_series(0, {m - 1})) AS j)),
+    FROM q CROSS JOIN (SELECT unnest(generate_series(0, {PQ_M - 1})) AS j)),
 c0 AS (SELECT m, rn - 1 AS cid, sv AS cv FROM (
     SELECT m, sv, row_number() OVER (PARTITION BY m ORDER BY vec_id) AS rn FROM sub)
-    WHERE rn <= {k}),
+    WHERE rn <= {PQ_K}),
 a1 AS (SELECT vec_id, m, cid, sv FROM (
     SELECT s.vec_id, s.m, c.cid, s.sv,
       row_number() OVER (PARTITION BY s.vec_id, s.m
@@ -3822,7 +3841,7 @@ SELECT query_id, vec_id, CAST(adc_dist AS BIGINT) AS adc_dist,
 FROM (SELECT query_id, vec_id, adc_dist,
         row_number() OVER (PARTITION BY query_id ORDER BY adc_dist, vec_id) AS rnk
       FROM adc)
-WHERE rnk <= {topk}
+WHERE rnk <= {PQ_TOPK}
 """
 
 
@@ -3849,14 +3868,14 @@ def q_cosine_bucketed(spark, sf):
     from osm_pt_validator_spark.operators.similarity import cosine_near_dup_pairs
 
     e = _t(spark, sf, "embeddings")
-    return cosine_near_dup_pairs(e, threshold=0.35, dim=64, num_planes=6).select(
+    return cosine_near_dup_pairs(e, threshold=0.35, dim=EMBED_DIM, num_planes=NUM_PLANES).select(
         "vec_a",
         "vec_b",
         F.round(F.col("sim") * 1e6).cast("long").alias("sim_ppm"),
     )
 
 
-def _sql_hyperplane_terms(dim: int, num_planes: int) -> str:
+def _sql_hyperplane_terms() -> str:
     """The hyperplane-LSH bucket expression replay (sign-bit fold over
     the deterministic sin() pseudo-planes) — single source of truth for
     every oracle that must reproduce hyperplane_bucket's buckets
@@ -3867,7 +3886,7 @@ def _sql_hyperplane_terms(dim: int, num_planes: int) -> str:
         "(CASE WHEN list_dot_product(v, ["
         + ", ".join(repr(c) for c in plane)
         + f"]) > 0 THEN {1 << m} ELSE 0 END)"
-        for m, plane in enumerate(hyperplane_coeffs(dim, num_planes))
+        for m, plane in enumerate(hyperplane_coeffs(EMBED_DIM, NUM_PLANES))
     )
 
 
@@ -3876,7 +3895,7 @@ def _sql_cosine_bucketed() -> str:
     literals, same left-to-right dot fold), then the bucket equi-join +
     exact cosine verify — candidate semantics identical to the Spark
     plan, so survivors match bit-for-bit."""
-    terms = _sql_hyperplane_terms(64, 6)
+    terms = _sql_hyperplane_terms()
     return f"""
 WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
 b AS (SELECT vec_id, v, {terms} AS bucket FROM e),
@@ -3900,11 +3919,11 @@ def q_diverse_sample(spark, sf):
     from osm_pt_validator_spark.operators.curation import diverse_sample
 
     e = _t(spark, sf, "embeddings")
-    return diverse_sample(e, dim=64, per_bucket=3, num_planes=6)
+    return diverse_sample(e, dim=EMBED_DIM, per_bucket=3, num_planes=NUM_PLANES)
 
 
 def _sql_diverse_sample() -> str:
-    terms = _sql_hyperplane_terms(64, 6)
+    terms = _sql_hyperplane_terms()
     return f"""
 WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
 b AS (SELECT vec_id, {terms} AS bucket FROM e),
@@ -4042,7 +4061,7 @@ GROUP BY 1, 2
 """
 
 
-# --- rows-only (non-SQL-expressible) ----------------------------------------
+# --- not SQL-expressible: replayed or golden-VALUES oracles -----------------
 
 
 def q_way_order_verdicts(spark, sf):
@@ -4268,7 +4287,7 @@ def _sql_lsh_ann() -> str:
     sin() literals are rendered here, and both engines fold the dot
     product left-to-right, so buckets (and therefore candidates and
     ranks) agree bit-for-bit."""
-    terms = _sql_hyperplane_terms(64, 6)
+    terms = _sql_hyperplane_terms()
     return f"""
 WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
 b AS (SELECT vec_id, v, {terms} AS bucket FROM e),
@@ -4295,7 +4314,7 @@ def q_lsh_ann_topk(spark, sf):
     queries = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return lsh_ann_topk(e, queries, dim=64, k=5, num_planes=6).select(
+    return lsh_ann_topk(e, queries, dim=EMBED_DIM, k=5, num_planes=NUM_PLANES).select(
         "query_id", "vec_id", F.col("rank").cast("int").alias("rank")
     )
 
@@ -4542,7 +4561,7 @@ def q_ivf_ann_topk(spark, sf):
 def q_verdict_heatmap(spark, sf):
     """North-star failure heatmap: validation verdicts located at their
     stop coordinates -> z=15 tiles (verdicts from the sequential
-    automaton — rows-only)."""
+    automaton — golden-VALUES oracle)."""
     from osm_pt_validator_spark.config import ValidationConfig
     from osm_pt_validator_spark.fixtures import (
         nodes_df,
@@ -5930,6 +5949,146 @@ FROM w CROSS JOIN t
 """
 
 
+# The driver contract: key -> (Spark callable, DuckDB oracle SQL). A key
+# is added here and nowhere else; queries() and oracle_sql() are views.
+CONTRACT: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    # relational core
+    "pricing_summary": (q_pricing_summary, SQL_PRICING),
+    "top_customers": (q_top_customers, SQL_TOP_CUSTOMERS),
+    "part_brand_stats": (q_part_brand_stats, SQL_PART_BRAND),
+    "customer_order_ranks": (q_customer_order_ranks, SQL_ORDER_RANKS),
+    "events_hourly": (q_events_hourly, SQL_EVENTS_HOURLY),
+    "event_props_stats": (q_event_props_stats, SQL_EVENT_PROPS),
+    "events_daily_pivot": (q_events_daily_pivot, SQL_EVENTS_PIVOT),
+    "orders_rollup": (q_orders_rollup, SQL_ORDERS_ROLLUP),
+    "events_cube": (q_events_cube, SQL_EVENTS_CUBE),
+    # validator family (SURVEY §2.2-2.4, §2.7)
+    "v_tags": (q_v_tags, SQL_V_TAGS),
+    "v_member_order": (q_v_member_order, SQL_V_MEMBER_ORDER),
+    "v_node_count": (q_v_node_count, SQL_V_NODE_COUNT),
+    "v_route_master": (q_v_route_master, SQL_V_ROUTE_MASTER),
+    "v_node_checks": (q_v_node_checks, SQL_V_NODE_CHECKS),
+    "v_oneway_url": (q_v_oneway_url, _sql_v_oneway()),
+    "parent_relations": (q_parent_relations, SQL_PARENT_RELATIONS),
+    # spatial (G3-G8)
+    "cell_counts_events": (q_cell_counts_events, SQL_CELL_COUNTS),
+    "focal_heatmap": (q_focal_heatmap, SQL_FOCAL_HEATMAP),
+    "zonal_stats_customers": (q_zonal_stats, _sql_zonal_stats()),
+    "zone_geometry": (q_zone_geometry, _sql_zone_geometry()),
+    "polyfill_zones": (q_polyfill_zones, _sql_polyfill_zones()),
+    "areal_interpolation": (q_areal_interpolation, _sql_areal_interpolation()),
+    "segment_intersections": (q_segment_intersections, _sql_segment_intersections()),
+    "convex_hull_membership": (q_convex_hull_membership, _sql_convex_hull_membership()),
+    "shared_segments_events": (q_shared_segments, SQL_SHARED_SEGMENTS),
+    "od_flows_events": (q_od_flows, SQL_OD_FLOWS),
+    "trajectory_turns": (q_trajectory_turns, _sql_trajectory_turns()),
+    "transit_reach": (q_transit_reach, _sql_transit_reach()),
+    "route_simplify": (q_route_simplify, _sql_route_simplify()),
+    "hotspot_clusters_events": (q_hotspot_clusters, SQL_HOTSPOT_CLUSTERS),
+    "compact_cover": (q_compact_cover, _sql_compact_cover()),
+    "tile_heatmap_customers": (q_tile_heatmap_customers, SQL_TILE_HEATMAP),
+    "tile_pyramid_heatmap": (q_tile_pyramid, SQL_TILE_PYRAMID),
+    "stop_route_proximity": (q_stop_route_proximity, SQL_STOP_ROUTE_PROXIMITY),
+    "stop_geometry_order": (q_stop_geometry_order, _sql_stop_geometry_order()),
+    "viterbi_match": (q_viterbi_match, _sql_viterbi_match()),
+    "decontaminate": (q_decontaminate, SQL_DECONTAMINATE),
+    "incremental_workset": (q_incremental_workset, SQL_INCREMENTAL_WORKSET),
+    "tile_vector_bboxes": (q_tile_vector_bboxes, _sql_tile_vector()),
+    "knn_customers_suppliers": (q_knn_customers_suppliers, SQL_KNN),
+    "distance_within_pairs": (q_distance_within_pairs, SQL_DISTANCE_WITHIN),
+    "transfer_candidates": (q_transfer_candidates, SQL_TRANSFER_CANDIDATES),
+    "salted_cell_join": (q_salted_cell_join, SQL_SALTED_JOIN),
+    # text / dedup / similarity
+    "doc_stats": (q_doc_stats, _sql_doc_stats()),
+    "doc_quality": (q_doc_quality, _sql_doc_quality()),
+    "ngram_counts": (q_ngram_counts, _sql_ngram_counts()),
+    "pmi_collocations": (q_pmi_collocations, _sql_pmi_collocations()),
+    "bpe_merges": (q_bpe_merges, _sql_bpe_merges()),
+    "bpe_tokenize": (q_bpe_tokenize, _sql_bpe_tokenize()),
+    "pack_chunks_bpe": (q_pack_chunks_bpe, _sql_pack_chunks_bpe()),
+    "trending_topk": (q_trending_topk, _sql_trending_topk()),
+    "streaming_heatmap_replay": (q_streaming_heatmap_replay, _sql_streaming_heatmap_replay()),
+    "streaming_sessions_replay": (q_streaming_sessions_replay, _sql_streaming_sessions_replay()),
+    "interval_join_replay": (q_interval_join_replay, _sql_interval_join_replay()),
+    "passage_windows": (q_passage_windows, _sql_passage_windows()),
+    "tfidf_top_terms": (q_tfidf_top_terms, _sql_tfidf()),
+    "fingerprint_groups": (q_fingerprint_groups, SQL_FINGERPRINT_GROUPS),
+    "dedup_kept": (q_dedup_kept, SQL_DEDUP_KEPT),
+    "corpus_curate": (q_corpus_curate, _sql_corpus_curate()),
+    "corpus_sample": (q_corpus_sample, _sql_corpus_sample()),
+    "weighted_sample": (q_weighted_sample, _sql_weighted_sample()),
+    "diverse_sample": (q_diverse_sample, _sql_diverse_sample()),
+    "corpus_split": (q_corpus_split, _sql_corpus_split()),
+    "dsir_weights": (q_dsir_weights, _sql_dsir_weights()),
+    "bigram_lm_scores": (q_bigram_lm_scores, _sql_bigram_lm_scores()),
+    "bm25_scores": (q_bm25_scores, _sql_bm25_scores()),
+    "curation_funnel": (q_curation_funnel, _sql_curation_funnel()),
+    "lang_quota": (q_lang_quota, _sql_lang_quota()),
+    "pack_chunks": (q_pack_chunks, _sql_pack_chunks()),
+    "doc_repetition": (q_doc_repetition, _sql_doc_repetition()),
+    # crawl-level curation
+    "crawl_latest": (q_crawl_latest, SQL_CRAWL_LATEST),
+    "blocklist_pages": (q_blocklist_pages, SQL_BLOCKLIST_PAGES),
+    "domain_link_graph": (q_domain_link_graph, SQL_DOMAIN_LINK_GRAPH),
+    "crawl_changed": (q_crawl_changed, SQL_CRAWL_CHANGED),
+    "domain_stats": (q_domain_stats, SQL_DOMAIN_STATS),
+    "pii_scrub": (q_pii_scrub, _sql_pii_scrub()),
+    "para_dedup": (q_para_dedup, _sql_para_dedup()),
+    "winnow_fps": (q_winnow_fps, _sql_winnow_fps()),
+    # mergeable sketches (operators/sketches.py)
+    "kmv_distinct_users": (q_kmv_distinct, _sql_kmv_distinct()),
+    "hll_distinct_users": (q_hll_distinct, _sql_hll_distinct()),
+    "cms_user_counts": (q_cms_user_counts, _sql_cms_user_counts()),
+    "bloom_prune_events": (q_bloom_prune, _sql_bloom_prune()),
+    "inverted_index": (q_inverted_index, _sql_inverted_index()),
+    "value_quantiles": (q_value_quantiles, _sql_value_quantiles()),
+    "key_skew_profile": (q_key_skew_profile, _sql_key_skew_profile()),
+    "page_rank_orders": (q_page_rank, _sql_page_rank()),
+    # temporal
+    "asof_crawl_events": (q_asof_crawl_events, SQL_ASOF_CRAWL),
+    "session_stats_events": (q_session_stats_events, SQL_SESSION_STATS),
+    "event_anomalies": (q_event_anomalies, SQL_EVENT_ANOMALIES),
+    "exact_median": (q_exact_median, SQL_EXACT_MEDIAN),
+    "exact_mad": (q_exact_mad, SQL_EXACT_MAD),
+    "retention_cohorts": (q_retention_cohorts, SQL_RETENTION_COHORTS),
+    "time_weighted_avg": (q_time_weighted_avg, SQL_TIME_WEIGHTED_AVG),
+    "funnel_stages": (q_funnel, SQL_FUNNEL),
+    "snapshot_upsert": (q_snapshot_upsert, SQL_SNAPSHOT_UPSERT),
+    "dup_spans": (q_dup_spans, _sql_dup_spans()),
+    "source_mixture": (q_source_mixture, SQL_SOURCE_MIXTURE),
+    "int8_ann_topk": (q_int8_ann_topk, SQL_INT8_ANN),
+    "int8_ivf_topk": (q_int8_ivf_topk, _sql_int8_ivf()),
+    "minhash_sigs": (q_minhash_sigs, _sql_minhash()),
+    "near_dup_pairs": (q_near_dup_pairs, _sql_near_dup()),
+    "jaccard_join": (q_jaccard_join, _sql_jaccard_join()),
+    "split_leakage": (q_split_leakage, _sql_split_leakage()),
+    "near_dup_clusters": (q_near_dup_clusters, _sql_near_dup_clusters()),
+    "dedup_clusters_kept": (q_dedup_clusters_kept, _sql_dedup_clusters_kept()),
+    "embedding_topk": (q_embedding_topk, SQL_EMBEDDING_TOPK),
+    "kmeans_centroids": (q_kmeans_centroids, _sql_kmeans()),
+    "semantic_dedup": (q_semantic_dedup, _sql_semantic_dedup()),
+    "pq_ann_topk": (q_pq_ann_topk, _sql_pq()),
+    "cosine_pairs": (q_cosine_pairs, SQL_COSINE_PAIRS),
+    "cosine_bucketed_pairs": (q_cosine_bucketed, _sql_cosine_bucketed()),
+    "pipeline_heatmap": (q_pipeline_heatmap, _sql_pipeline_heatmap()),
+    # no SQL form: the oracle replays their arithmetic, or holds golden VALUES
+    # transcribed from the reference's test expectations
+    "way_order_verdicts": (q_way_order_verdicts, _sql_way_order_verdicts()),
+    "validate_pipeline": (q_validate_pipeline, SQL_VALIDATE_PIPELINE),
+    "pip_contained": (q_pip_contained, _sql_pip()),
+    "simhash_pairs": (q_simhash_pairs, _sql_simhash()),
+    "lsh_ann_topk": (q_lsh_ann_topk, _sql_lsh_ann()),
+    "ivf_ann_topk": (q_ivf_ann_topk, _sql_ivf_ann()),
+    "verdict_heatmap": (q_verdict_heatmap, _sql_verdict_heatmap()),
+    "media_decode": (q_media_decode, SQL_MEDIA_DECODE),
+    "media_features": (q_media_features, SQL_MEDIA_FEATURES),
+    "media_resize": (q_media_resize, SQL_MEDIA_RESIZE),
+    "frame_sample": (q_frame_sample, SQL_FRAME_SAMPLE),
+    "gap_prefilter": (q_gap_prefilter, _sql_gap_prefilter()),
+    "mentions_extract": (q_mentions_extract, SQL_MENTIONS),
+}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def wrap(fn):
         def run(spark, sf_dir):
@@ -5938,271 +6097,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    return {
-        # relational core
-        "pricing_summary": wrap(q_pricing_summary),
-        "top_customers": wrap(q_top_customers),
-        "part_brand_stats": wrap(q_part_brand_stats),
-        "customer_order_ranks": wrap(q_customer_order_ranks),
-        "events_hourly": wrap(q_events_hourly),
-        "event_props_stats": wrap(q_event_props_stats),
-        "events_daily_pivot": wrap(q_events_daily_pivot),
-        "orders_rollup": wrap(q_orders_rollup),
-        "events_cube": wrap(q_events_cube),
-        # validator family (SURVEY §2.2-2.4, §2.7)
-        "v_tags": wrap(q_v_tags),
-        "v_member_order": wrap(q_v_member_order),
-        "v_node_count": wrap(q_v_node_count),
-        "v_route_master": wrap(q_v_route_master),
-        "v_node_checks": wrap(q_v_node_checks),
-        "v_oneway_url": wrap(q_v_oneway_url),
-        "parent_relations": wrap(q_parent_relations),
-        # spatial (G3-G8)
-        "cell_counts_events": wrap(q_cell_counts_events),
-        "focal_heatmap": wrap(q_focal_heatmap),
-        "zonal_stats_customers": wrap(q_zonal_stats),
-        "zone_geometry": wrap(q_zone_geometry),
-        "polyfill_zones": wrap(q_polyfill_zones),
-        "areal_interpolation": wrap(q_areal_interpolation),
-        "segment_intersections": wrap(q_segment_intersections),
-        "convex_hull_membership": wrap(q_convex_hull_membership),
-        "shared_segments_events": wrap(q_shared_segments),
-        "od_flows_events": wrap(q_od_flows),
-        "trajectory_turns": wrap(q_trajectory_turns),
-        "transit_reach": wrap(q_transit_reach),
-        "route_simplify": wrap(q_route_simplify),
-        "hotspot_clusters_events": wrap(q_hotspot_clusters),
-        "compact_cover": wrap(q_compact_cover),
-        "tile_heatmap_customers": wrap(q_tile_heatmap_customers),
-        "tile_pyramid_heatmap": wrap(q_tile_pyramid),
-        "stop_route_proximity": wrap(q_stop_route_proximity),
-        "stop_geometry_order": wrap(q_stop_geometry_order),
-        "viterbi_match": wrap(q_viterbi_match),
-        "decontaminate": wrap(q_decontaminate),
-        "incremental_workset": wrap(q_incremental_workset),
-        "tile_vector_bboxes": wrap(q_tile_vector_bboxes),
-        "knn_customers_suppliers": wrap(q_knn_customers_suppliers),
-        "distance_within_pairs": wrap(q_distance_within_pairs),
-        "transfer_candidates": wrap(q_transfer_candidates),
-        "salted_cell_join": wrap(q_salted_cell_join),
-        # text / dedup / similarity
-        "doc_stats": wrap(q_doc_stats),
-        "doc_quality": wrap(q_doc_quality),
-        "ngram_counts": wrap(q_ngram_counts),
-        "pmi_collocations": wrap(q_pmi_collocations),
-        "bpe_merges": wrap(q_bpe_merges),
-        "bpe_tokenize": wrap(q_bpe_tokenize),
-        "pack_chunks_bpe": wrap(q_pack_chunks_bpe),
-        "trending_topk": wrap(q_trending_topk),
-        "streaming_heatmap_replay": wrap(q_streaming_heatmap_replay),
-        "streaming_sessions_replay": wrap(q_streaming_sessions_replay),
-        "interval_join_replay": wrap(q_interval_join_replay),
-        "passage_windows": wrap(q_passage_windows),
-        "tfidf_top_terms": wrap(q_tfidf_top_terms),
-        "fingerprint_groups": wrap(q_fingerprint_groups),
-        "dedup_kept": wrap(q_dedup_kept),
-        "corpus_curate": wrap(q_corpus_curate),
-        "corpus_sample": wrap(q_corpus_sample),
-        "weighted_sample": wrap(q_weighted_sample),
-        "diverse_sample": wrap(q_diverse_sample),
-        "corpus_split": wrap(q_corpus_split),
-        "dsir_weights": wrap(q_dsir_weights),
-        "bigram_lm_scores": wrap(q_bigram_lm_scores),
-        "bm25_scores": wrap(q_bm25_scores),
-        "curation_funnel": wrap(q_curation_funnel),
-        "lang_quota": wrap(q_lang_quota),
-        "pack_chunks": wrap(q_pack_chunks),
-        "doc_repetition": wrap(q_doc_repetition),
-        # crawl-level curation
-        "crawl_latest": wrap(q_crawl_latest),
-        "blocklist_pages": wrap(q_blocklist_pages),
-        "domain_link_graph": wrap(q_domain_link_graph),
-        "crawl_changed": wrap(q_crawl_changed),
-        "domain_stats": wrap(q_domain_stats),
-        "pii_scrub": wrap(q_pii_scrub),
-        "para_dedup": wrap(q_para_dedup),
-        "winnow_fps": wrap(q_winnow_fps),
-        # mergeable sketches (operators/sketches.py)
-        "kmv_distinct_users": wrap(q_kmv_distinct),
-        "hll_distinct_users": wrap(q_hll_distinct),
-        "cms_user_counts": wrap(q_cms_user_counts),
-        "bloom_prune_events": wrap(q_bloom_prune),
-        "inverted_index": wrap(q_inverted_index),
-        "value_quantiles": wrap(q_value_quantiles),
-        "key_skew_profile": wrap(q_key_skew_profile),
-        "page_rank_orders": wrap(q_page_rank),
-        # temporal
-        "asof_crawl_events": wrap(q_asof_crawl_events),
-        "session_stats_events": wrap(q_session_stats_events),
-        "event_anomalies": wrap(q_event_anomalies),
-        "exact_median": wrap(q_exact_median),
-        "exact_mad": wrap(q_exact_mad),
-        "retention_cohorts": wrap(q_retention_cohorts),
-        "time_weighted_avg": wrap(q_time_weighted_avg),
-        "funnel_stages": wrap(q_funnel),
-        "snapshot_upsert": wrap(q_snapshot_upsert),
-        "dup_spans": wrap(q_dup_spans),
-        "source_mixture": wrap(q_source_mixture),
-        "int8_ann_topk": wrap(q_int8_ann_topk),
-        "int8_ivf_topk": wrap(q_int8_ivf_topk),
-        "minhash_sigs": wrap(q_minhash_sigs),
-        "near_dup_pairs": wrap(q_near_dup_pairs),
-        "jaccard_join": wrap(q_jaccard_join),
-        "split_leakage": wrap(q_split_leakage),
-        "near_dup_clusters": wrap(q_near_dup_clusters),
-        "dedup_clusters_kept": wrap(q_dedup_clusters_kept),
-        "embedding_topk": wrap(q_embedding_topk),
-        "kmeans_centroids": wrap(q_kmeans_centroids),
-        "semantic_dedup": wrap(q_semantic_dedup),
-        "pq_ann_topk": wrap(q_pq_ann_topk),
-        "cosine_pairs": wrap(q_cosine_pairs),
-        "cosine_bucketed_pairs": wrap(q_cosine_bucketed),
-        "pipeline_heatmap": wrap(q_pipeline_heatmap),
-        # rows-only (non-SQL-expressible)
-        "way_order_verdicts": wrap(q_way_order_verdicts),
-        "validate_pipeline": wrap(q_validate_pipeline),
-        "pip_contained": wrap(q_pip_contained),
-        "simhash_pairs": wrap(q_simhash_pairs),
-        "lsh_ann_topk": wrap(q_lsh_ann_topk),
-        "ivf_ann_topk": wrap(q_ivf_ann_topk),
-        "verdict_heatmap": wrap(q_verdict_heatmap),
-        "media_decode": wrap(q_media_decode),
-        "media_features": wrap(q_media_features),
-        "media_resize": wrap(q_media_resize),
-        "frame_sample": wrap(q_frame_sample),
-        "gap_prefilter": wrap(q_gap_prefilter),
-        "mentions_extract": wrap(q_mentions_extract),
-    }
+    return {k: wrap(fn) for k, (fn, _sql) in CONTRACT.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "pricing_summary": SQL_PRICING,
-        "top_customers": SQL_TOP_CUSTOMERS,
-        "part_brand_stats": SQL_PART_BRAND,
-        "customer_order_ranks": SQL_ORDER_RANKS,
-        "events_hourly": SQL_EVENTS_HOURLY,
-        "event_props_stats": SQL_EVENT_PROPS,
-        "events_daily_pivot": SQL_EVENTS_PIVOT,
-        "orders_rollup": SQL_ORDERS_ROLLUP,
-        "events_cube": SQL_EVENTS_CUBE,
-        "v_tags": SQL_V_TAGS,
-        "v_member_order": SQL_V_MEMBER_ORDER,
-        "v_node_count": SQL_V_NODE_COUNT,
-        "v_route_master": SQL_V_ROUTE_MASTER,
-        "v_node_checks": SQL_V_NODE_CHECKS,
-        "v_oneway_url": _sql_v_oneway(),
-        "parent_relations": SQL_PARENT_RELATIONS,
-        "cell_counts_events": SQL_CELL_COUNTS,
-        "focal_heatmap": SQL_FOCAL_HEATMAP,
-        "zonal_stats_customers": _sql_zonal_stats(),
-        "zone_geometry": _sql_zone_geometry(),
-        "polyfill_zones": _sql_polyfill_zones(),
-        "areal_interpolation": _sql_areal_interpolation(),
-        "segment_intersections": _sql_segment_intersections(),
-        "convex_hull_membership": _sql_convex_hull_membership(),
-        "shared_segments_events": SQL_SHARED_SEGMENTS,
-        "od_flows_events": SQL_OD_FLOWS,
-        "trajectory_turns": _sql_trajectory_turns(),
-        "transit_reach": _sql_transit_reach(),
-        "route_simplify": _sql_route_simplify(),
-        "hotspot_clusters_events": SQL_HOTSPOT_CLUSTERS,
-        "compact_cover": _sql_compact_cover(),
-        "tile_heatmap_customers": SQL_TILE_HEATMAP,
-        "tile_pyramid_heatmap": SQL_TILE_PYRAMID,
-        "stop_route_proximity": SQL_STOP_ROUTE_PROXIMITY,
-        "stop_geometry_order": _sql_stop_geometry_order(),
-        "viterbi_match": _sql_viterbi_match(),
-        "decontaminate": SQL_DECONTAMINATE,
-        "incremental_workset": SQL_INCREMENTAL_WORKSET,
-        "tile_vector_bboxes": _sql_tile_vector(),
-        "knn_customers_suppliers": SQL_KNN,
-        "distance_within_pairs": SQL_DISTANCE_WITHIN,
-        "transfer_candidates": SQL_TRANSFER_CANDIDATES,
-        "salted_cell_join": SQL_SALTED_JOIN,
-        "doc_stats": _sql_doc_stats(),
-        "doc_quality": _sql_doc_quality(),
-        "fingerprint_groups": SQL_FINGERPRINT_GROUPS,
-        "dedup_kept": SQL_DEDUP_KEPT,
-        "corpus_curate": _sql_corpus_curate(),
-        "corpus_sample": _sql_corpus_sample(),
-        "weighted_sample": _sql_weighted_sample(),
-        "diverse_sample": _sql_diverse_sample(),
-        "corpus_split": _sql_corpus_split(),
-        "dsir_weights": _sql_dsir_weights(),
-        "bigram_lm_scores": _sql_bigram_lm_scores(),
-        "bm25_scores": _sql_bm25_scores(),
-        "curation_funnel": _sql_curation_funnel(),
-        "lang_quota": _sql_lang_quota(),
-        "pack_chunks": _sql_pack_chunks(),
-        "doc_repetition": _sql_doc_repetition(),
-        "crawl_latest": SQL_CRAWL_LATEST,
-        "blocklist_pages": SQL_BLOCKLIST_PAGES,
-        "domain_link_graph": SQL_DOMAIN_LINK_GRAPH,
-        "crawl_changed": SQL_CRAWL_CHANGED,
-        "domain_stats": SQL_DOMAIN_STATS,
-        "pii_scrub": _sql_pii_scrub(),
-        "para_dedup": _sql_para_dedup(),
-        "winnow_fps": _sql_winnow_fps(),
-        "kmv_distinct_users": _sql_kmv_distinct(),
-        "hll_distinct_users": _sql_hll_distinct(),
-        "cms_user_counts": _sql_cms_user_counts(),
-        "bloom_prune_events": _sql_bloom_prune(),
-        "inverted_index": _sql_inverted_index(),
-        "value_quantiles": _sql_value_quantiles(),
-        "key_skew_profile": _sql_key_skew_profile(),
-        "page_rank_orders": _sql_page_rank(),
-        "asof_crawl_events": SQL_ASOF_CRAWL,
-        "session_stats_events": SQL_SESSION_STATS,
-        "event_anomalies": SQL_EVENT_ANOMALIES,
-        "exact_median": SQL_EXACT_MEDIAN,
-        "exact_mad": SQL_EXACT_MAD,
-        "retention_cohorts": SQL_RETENTION_COHORTS,
-        "time_weighted_avg": SQL_TIME_WEIGHTED_AVG,
-        "funnel_stages": SQL_FUNNEL,
-        "snapshot_upsert": SQL_SNAPSHOT_UPSERT,
-        "dup_spans": _sql_dup_spans(),
-        "source_mixture": SQL_SOURCE_MIXTURE,
-        "int8_ann_topk": SQL_INT8_ANN,
-        "int8_ivf_topk": _sql_int8_ivf(),
-        "minhash_sigs": _sql_minhash(),
-        "jaccard_join": _sql_jaccard_join(),
-        "near_dup_pairs": _sql_near_dup(),
-        "split_leakage": _sql_split_leakage(),
-        "near_dup_clusters": _sql_near_dup_clusters(),
-        "dedup_clusters_kept": _sql_dedup_clusters_kept(),
-        "embedding_topk": SQL_EMBEDDING_TOPK,
-        "kmeans_centroids": _sql_kmeans(),
-        "semantic_dedup": _sql_semantic_dedup(),
-        "pq_ann_topk": _sql_pq(),
-        "cosine_pairs": SQL_COSINE_PAIRS,
-        "cosine_bucketed_pairs": _sql_cosine_bucketed(),
-        "mentions_extract": SQL_MENTIONS,
-        "pipeline_heatmap": _sql_pipeline_heatmap(),
-        "lsh_ann_topk": _sql_lsh_ann(),
-        "simhash_pairs": _sql_simhash(),
-        "ivf_ann_topk": _sql_ivf_ann(),
-        "media_decode": SQL_MEDIA_DECODE,
-        "media_features": SQL_MEDIA_FEATURES,
-        "media_resize": SQL_MEDIA_RESIZE,
-        "frame_sample": SQL_FRAME_SAMPLE,
-        "gap_prefilter": _sql_gap_prefilter(),
-        "pip_contained": _sql_pip(),
-        "ngram_counts": _sql_ngram_counts(),
-        "pmi_collocations": _sql_pmi_collocations(),
-        "bpe_merges": _sql_bpe_merges(),
-        "bpe_tokenize": _sql_bpe_tokenize(),
-        "pack_chunks_bpe": _sql_pack_chunks_bpe(),
-        "trending_topk": _sql_trending_topk(),
-        "streaming_heatmap_replay": _sql_streaming_heatmap_replay(),
-        "streaming_sessions_replay": _sql_streaming_sessions_replay(),
-        "interval_join_replay": _sql_interval_join_replay(),
-        "passage_windows": _sql_passage_windows(),
-        "tfidf_top_terms": _sql_tfidf(),
-        # golden VALUES oracles transcribed from the reference's test
-        # expectations (the automaton itself is not SQL-expressible,
-        # but its expected outputs on the fixture cases are constants)
-        "way_order_verdicts": _sql_way_order_verdicts(),
-        "validate_pipeline": SQL_VALIDATE_PIPELINE,
-        "verdict_heatmap": _sql_verdict_heatmap(),
-    }
+    return {k: sql for k, (_fn, sql) in CONTRACT.items()}

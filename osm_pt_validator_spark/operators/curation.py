@@ -490,30 +490,29 @@ def dsir_weights(
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=True)
     )
-    # totals as windows over the <= `buckets`-row histograms (every
-    # raw bucket row carries rn; tn rides the target rows through the
-    # left join and max() fills the target-less buckets) — no 1-row
-    # aggs, no crossJoin stages.
-    every = Window.partitionBy(F.lit(1))
+    # the raw total is a window over the <= `buckets`-row histogram;
+    # the target total comes from the target histogram itself, as a
+    # broadcast 1-row frame — read through the raw<-target LEFT join it
+    # would be lost whenever the target shares no bucket with the corpus
     raw_hist = doc_counts.groupBy("bucket").agg(
         F.sum("c").alias("r")
-    ).withColumn("rn", F.sum("r").over(every))
+    ).withColumn("rn", F.sum("r").over(Window.partitionBy(F.lit(1))))
     tgt_hist = (
         bucketed(target, with_id=False)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("t"))
-        .withColumn("tn", F.sum("t").over(every))
     )
+    tgt_total = tgt_hist.agg(F.sum("t").alias("tn"))
     ratio = (
         raw_hist.join(F.broadcast(tgt_hist), "bucket", "left")
-        .withColumn("tn_all", F.max("tn").over(every))
+        .crossJoin(F.broadcast(tgt_total))
         .select(
             "bucket",
             F.round(
                 (
                     F.log(
                         (F.coalesce(F.col("t"), F.lit(0)) + 1.0)
-                        / (F.coalesce(F.col("tn_all"), F.lit(0)) + buckets)
+                        / (F.coalesce(F.col("tn"), F.lit(0)) + buckets)
                     )
                     - F.log((F.col("r") + 1.0) / (F.col("rn") + buckets))
                 )

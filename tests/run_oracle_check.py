@@ -1,10 +1,9 @@
 """Standalone replica of the driver's correctness gate.
 
-Runs every `__spark_entry__.queries()` entry; entries with an
-`oracle_sql()` twin are value-hash compared against DuckDB on the same
-parquet dir (row count, column names, order-insensitive multiset of
-stringified values with columns sorted by name); the rest get a
-rows-only smoke count.
+Runs every `__spark_entry__.queries()` entry and value-hash compares it
+against its `oracle_sql()` twin in DuckDB on the same parquet dir (row
+count, column names, order-insensitive multiset of stringified values
+with columns sorted by name).
 
     python tests/run_oracle_check.py [sf_dir] [query ...]  # default sf0.01, all
 
@@ -39,17 +38,14 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs, oracles = entry.queries(), entry.oracle_sql()
-    ok, rows_only, bad = [], [], []
+    ok, bad = [], []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            if name in oracles:
-                problems, n = compare_query(spark, sf, name, fn, oracles[name])
-                (bad if problems else ok).append((name, problems or n))
-            else:
-                rows_only.append((name, fn(spark, sf).count()))
+            problems, n = compare_query(spark, sf, name, fn, oracles[name])
+            (bad if problems else ok).append((name, problems or n))
         except Exception as exc:  # noqa: BLE001 - report and continue
             bad.append((name, str(exc)[:2000]))
         print(
@@ -62,7 +58,6 @@ def main() -> int:
         json.dumps(
             {
                 "oracle_matched": len(ok),
-                "rows_only": len(rows_only),
                 "failed": [{"query": n, "detail": d} for n, d in bad],
                 "sf_dir": sf,
             }

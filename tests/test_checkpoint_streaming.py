@@ -518,6 +518,9 @@ def test_sessions_replay_oracle_is_tie_proof(spark):
         (2, t0),
         (2, t0),
         (2, t0 + dt.timedelta(minutes=5)),
+        # user 3: a fractional second before 1970 — unix_timestamp and
+        # the oracle's `//` both truncate it toward zero, to -1
+        (3, dt.datetime(1969, 12, 31, 23, 59, 58, 500000)),
     ]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp")
     got = sorted(
@@ -538,5 +541,43 @@ def test_sessions_replay_oracle_is_tie_proof(spark):
             (1, 1, e0, e0),
             (1, 2, e0 + 1800, e0 + 1800),
             (2, 3, e0, e0 + 300),
+            (3, 1, -1, -1),
         ]
     )
+
+
+def test_heatmap_replay_oracle_floors_pre_1970_windows(spark, tmp_path):
+    """F.window floors an event time to its window start, while DuckDB's
+    bare `//` truncates toward zero: the streaming_heatmap_replay oracle
+    must put an event just before the epoch in the window starting
+    6 hours earlier, as Spark does, not in the one starting at 0."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    rows = [
+        (1, 10, dt.datetime(1969, 12, 31, 23, 59, 58, 500000)),
+        (1, 10, dt.datetime(1969, 12, 31, 18, 0, 0)),
+        (2, 20, dt.datetime(1970, 1, 1, 0, 0, 1)),
+        (3, 30, dt.datetime(2024, 1, 1, 5, 59, 59)),
+    ]
+    events = tmp_path / "events.parquet"
+    spark.createDataFrame(
+        rows, "user_id long, event_id long, ts timestamp"
+    ).write.parquet(str(events))
+    got = sorted(
+        tuple(r)
+        for r in entry.queries()["streaming_heatmap_replay"](
+            spark, str(tmp_path)
+        ).collect()
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{events}/*.parquet')"
+    )
+    sql = entry.oracle_sql()["streaming_heatmap_replay"]
+    want = sorted(tuple(r) for r in con.execute(sql).fetchall())
+    assert got == want
+    assert [r[0] for r in got] == [-21600, 0, 1704067200]
+    assert got[0][3] == 2

@@ -312,7 +312,8 @@ def test_dsir_weights_python_replay_and_domain_separation(spark):
     """dsir_weights against an exact python replay (hashlib md5
     bucketing, math.log ratios, half-away micro-nat rounding) on a
     constructed two-domain corpus; the target-domain docs must score
-    strictly higher than the off-domain ones."""
+    strictly higher than the off-domain ones. A target that shares no
+    bucket with the corpus must still enter the smoothed target total."""
     import hashlib
     import math
 
@@ -327,19 +328,7 @@ def test_dsir_weights_python_replay_and_domain_separation(spark):
         "click here to buy cheap shoes online today",
         "subscribe now for the best shoe deals online",
     ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(medical + web + [""])],
-        "doc_id long, text string",
-    )
-    target = spark.createDataFrame(
-        [(100 + i, t) for i, t in enumerate(medical)],
-        "doc_id long, text string",
-    )
     B = 64
-    got = {
-        r.doc_id: (r.weight_micro, r.n_grams)
-        for r in dsir_weights(docs, target, buckets=B).collect()
-    }
 
     def grams(text):
         toks = [t for t in __import__("re").split(r"[^a-z0-9']+", text.lower()) if t]
@@ -348,39 +337,59 @@ def test_dsir_weights_python_replay_and_domain_separation(spark):
     def bucket(g):
         return int(hashlib.md5(("dsir" + g).encode()).hexdigest()[:15], 16) % B
 
-    raw, tgt = {}, {}
-    per_doc = {}
-    for i, t in enumerate(medical + web + [""]):
-        bs = [bucket(g) for g in grams(t)]
-        per_doc[i] = bs
-        for b in bs:
-            raw[b] = raw.get(b, 0) + 1
-    for t in medical:
-        for g in grams(t):
-            tgt[bucket(g)] = tgt.get(bucket(g), 0) + 1
-    rn, tn = sum(raw.values()), sum(tgt.values())
-
     def half_away(x):
         return int(math.floor(abs(x) + 0.5)) * (1 if x >= 0 else -1)
 
-    want = {}
-    for i, bs in per_doc.items():
-        if not bs:
-            continue  # zero-gram doc is absent from the output
-        w = sum(
-            half_away(
-                (
-                    math.log((tgt.get(b, 0) + 1.0) / (tn + B))
-                    - math.log((raw[b] + 1.0) / (rn + B))
+    def replay(doc_texts, tgt_texts):
+        raw, tgt = {}, {}
+        per_doc = {}
+        for i, t in enumerate(doc_texts):
+            bs = [bucket(g) for g in grams(t)]
+            per_doc[i] = bs
+            for b in bs:
+                raw[b] = raw.get(b, 0) + 1
+        for t in tgt_texts:
+            for g in grams(t):
+                tgt[bucket(g)] = tgt.get(bucket(g), 0) + 1
+        rn, tn = sum(raw.values()), sum(tgt.values())
+        want = {}
+        for i, bs in per_doc.items():
+            if not bs:
+                continue  # zero-gram doc is absent from the output
+            w = sum(
+                half_away(
+                    (
+                        math.log((tgt.get(b, 0) + 1.0) / (tn + B))
+                        - math.log((raw[b] + 1.0) / (rn + B))
+                    )
+                    * 1e6
                 )
-                * 1e6
+                for b in bs
             )
-            for b in bs
+            want[i] = (w, len(bs))
+        return want
+
+    def run(doc_texts, tgt_texts):
+        docs = spark.createDataFrame(
+            list(enumerate(doc_texts)), "doc_id long, text string"
         )
-        want[i] = (w, len(bs))
-    assert got == want
+        target = spark.createDataFrame(
+            [(100 + i, t) for i, t in enumerate(tgt_texts)],
+            "doc_id long, text string",
+        )
+        return {
+            r.doc_id: (r.weight_micro, r.n_grams)
+            for r in dsir_weights(docs, target, buckets=B).collect()
+        }
+
+    got = run(medical + web + [""], medical)
+    assert got == replay(medical + web + [""], medical)
     # domain separation: every medical doc outscores every web doc
     assert min(got[i][0] for i in range(3)) > max(got[i][0] for i in (3, 4))
+
+    # disjoint target: ln(1/(1+B)) - ln(2/(1+B)) = -ln 2 per gram
+    assert bucket("aaa") != bucket("ccc")
+    assert run(["aaa"], ["ccc"]) == replay(["aaa"], ["ccc"]) == {0: (-693147, 1)}
 
 
 def test_curation_funnel_all_stages(spark):
