@@ -2999,8 +2999,8 @@ def _sql_bpe_merges() -> str:
 def q_bpe_tokenize(spark, sf):
     """The apply half of the tokenizer loop (text.bpe_apply): train the
     3-rule merge table, then tokenize the WHOLE corpus with it — one
-    map-only chained array rewrite (zero shuffle; the arrow method is
-    the production shape for 10^4-rule vocabularies). Output one row
+    map-only Arrow pass applying every rule (zero shuffle, one scan at
+    any vocabulary size). Output one row
     per (doc, token position) so the oracle value-hash checks every
     produced token, not just counts."""
     from osm_pt_validator_spark.operators.text import bpe_apply, bpe_merges

@@ -40,7 +40,7 @@ def main(argv: list[str] | None = None) -> int:
         missing_relation_verdicts,
         validate_all,
     )
-    from osm_pt_validator_spark.plans.checkpoint import run_stage
+    from osm_pt_validator_spark.plans.checkpoint import read_manifest, run_stage
     from osm_pt_validator_spark.session import ensure_py_files, get_spark
     from osm_pt_validator_spark.sources.routes_file import read_routes_files
 
@@ -125,8 +125,11 @@ def main(argv: list[str] | None = None) -> int:
             rels.unpersist()
     run_stage(spark, args.out, "invalid_relations", lambda: collect_invalid(verdicts))
 
-    n = verdicts.count()
-    print(f"relations with verdicts: {verdicts.select('relation_id').distinct().count()}; verdicts: {n}")
+    # both numbers were observed during the stage writes: invalid_relations
+    # has one row per relation with a verdict
+    n = read_manifest(args.out, "verdicts")["rows"]
+    rels = read_manifest(args.out, "invalid_relations")["rows"]
+    print(f"relations with verdicts: {rels}; verdicts: {n}")
     return 1 if n > 0 else 0
 
 

@@ -90,18 +90,11 @@ def validate_incremental(
     verdicts for them (checkpointed by plans/checkpoint.py), which is
     exactly the resume-from-lineage contract.
     """
-    from osm_pt_validator_spark.operators.pipeline import validate_all
+    from osm_pt_validator_spark.operators.pipeline import gone_verdicts, validate_all
 
     ws = incremental_workset(old_rels, new_rels)
     todo_ids = ws.filter(F.col("status").isin("new", "changed")).select("relation_id")
     todo = new_rels.join(todo_ids, "relation_id", "left_semi")
     verdicts, errors = validate_all(todo, nodes, ways, config)
-
-    gone = ws.filter(F.col("status") == "gone").select(
-        "relation_id",
-        F.lit(0).alias("stage_no"),
-        F.lit(0).cast("long").alias("seq"),
-        F.lit("").alias("url"),
-        F.lit("relation no longer exists").alias("message"),
-    )
+    gone = gone_verdicts(ws.filter(F.col("status") == "gone"))
     return verdicts.unionByName(gone), errors, ws

@@ -128,15 +128,18 @@ def missing_relation_verdicts(work: DataFrame, relations: DataFrame) -> DataFram
     present = relations.select("relation_id").join(
         F.broadcast(work_ids), "relation_id", "left_semi"
     )
-    return (
-        work_ids.join(present, "relation_id", "left_anti")
-        .select(
-            "relation_id",
-            F.lit(0).alias("stage_no"),
-            F.lit(0).cast("long").alias("seq"),
-            F.lit("").alias("url"),
-            F.lit("relation no longer exists").alias("message"),
-        )
+    return gone_verdicts(work_ids.join(present, "relation_id", "left_anti"))
+
+
+def gone_verdicts(ids: DataFrame) -> DataFrame:
+    """One 'relation no longer exists' verdict per relation_id of `ids`
+    (the reference's HTTP-410 path, cmd/validate-rm/main.go:59-63)."""
+    return ids.select(
+        "relation_id",
+        F.lit(0).alias("stage_no"),
+        F.lit(0).cast("long").alias("seq"),
+        F.lit("").alias("url"),
+        F.lit("relation no longer exists").alias("message"),
     )
 
 

@@ -596,9 +596,6 @@ def bpe_apply(
     merges: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "auto",
-    max_expr_rules: int = 16,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Tokenize the corpus with a TRAINED merge table — the apply half
     of the BPE loop (:func:`bpe_merges` trains the vocabulary; this is
@@ -608,72 +605,37 @@ def bpe_apply(
     ``merges``: (round, left, right[, pair_n]) as produced by
     :func:`bpe_merges`; rules apply in round order. The table is
     vocab-sized by definition, so collecting it to the driver is the
-    sanctioned broadcast-dim materialisation — each rule becomes a
-    literal in the rewrite (expr path) or a closure constant shipped
-    with the Arrow UDF (arrow path).
+    sanctioned broadcast-dim materialisation — the rules become closure
+    constants shipped with the Arrow UDF.
 
-    Two physical strategies, identical output:
-
-    * ``expr``: one per-rule array rewrite per projection — pure JVM
-      column algebra, SQL-replayable. ``checkpoint_every=1`` (the
-      default) eagerly localCheckpoints after EACH rule, exactly like
-      the trainer's rounds, and this is load-bearing, not a tuning
-      knob: chained un-materialized rewrites let Catalyst collapse the
-      projections, substituting rule k-1's whole rewrite into every
-      lambda reference of rule k — and because try_element_at
-      re-evaluates its input expression per element access, the work
-      becomes O(tokens^rules) per row (measured: 3 rules at sf0.01 went
-      from 1.8 s materialized to a >100 s hang collapsed). Right for
-      bounded rule counts (tests, oracle twins).
-    * ``arrow``: ONE mapInPandas pass applying every rule per batch —
-      the 100 TB shape: a production vocabulary is 10^4-10^5 rules,
-      which no expression chain survives, while the Arrow pass scans
-      the corpus exactly once regardless of vocabulary size. Greedy
-      per-rule application is provably identical to the per-position
-      algebra because the trainer only emits l != r rules (matches
-      cannot overlap).
-
-    ``auto`` picks expr for <= ``max_expr_rules`` rules, arrow above.
-    Map-only either way — zero shuffle, pipelined with the scan.
+    ONE mapInPandas pass applies every rule per batch, so the corpus is
+    scanned exactly once regardless of vocabulary size (a production
+    vocabulary is 10^4-10^5 rules). Greedy per-rule application equals
+    the trainer's per-position algebra because the trainer only emits
+    l != r rules (matches cannot overlap). Map-only — zero shuffle,
+    pipelined with the scan.
     Output: (id_col, toks ARRAY<STRING>, n_tokens INT).
     """
+    import pandas as pd
+
     rules = [
-        (row["left"], row["right"])
-        for row in merges.orderBy("round").collect()  # collect-ok: vocab-sized merge table -> rewrite literals
+        (row["left"], row["right"], f"{row['left']}_{row['right']}")
+        for row in merges.orderBy("round").collect()  # collect-ok: vocab-sized merge table -> closure constants
     ]
     base = documents.select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
-    if method == "auto":
-        method = "expr" if len(rules) <= max_expr_rules else "arrow"
-    if method == "expr":
-        cur = base
-        for k, (l, r) in enumerate(rules, start=1):
-            cur = cur.select(
-                F.col(id_col), _merge_rewrite(F.col("toks"), l, r).alias("toks")
-            )
-            if checkpoint_every and k % checkpoint_every == 0 and k < len(rules):
-                cur = cur.localCheckpoint(eager=True)
-        out = cur
-    elif method == "arrow":
-        import pandas as pd
 
-        const_rules = [(l, r, f"{l}_{r}") for l, r in rules]
+    def gen(batches):
+        for pdf in batches:
+            rewritten = []
+            for toks in pdf["toks"]:
+                t = list(toks)
+                for l, r, m in rules:
+                    t = _py_apply_merge(t, l, r, m)
+                rewritten.append(t)
+            yield pd.DataFrame({id_col: pdf[id_col], "toks": rewritten})
 
-        def gen(batches):
-            for pdf in batches:
-                rewritten = []
-                for toks in pdf["toks"]:
-                    t = list(toks)
-                    for l, r, m in const_rules:
-                        t = _py_apply_merge(t, l, r, m)
-                    rewritten.append(t)
-                yield pd.DataFrame({id_col: pdf[id_col], "toks": rewritten})
-
-        id_type = base.schema[id_col].dataType.simpleString()
-        out = base.mapInPandas(
-            gen, schema=f"{id_col} {id_type}, toks array<string>"
-        )
-    else:
-        raise ValueError(f"unknown method {method!r} (expr | arrow | auto)")
+    id_type = base.schema[id_col].dataType.simpleString()
+    out = base.mapInPandas(gen, schema=f"{id_col} {id_type}, toks array<string>")
     return out.select(
         id_col, "toks", F.size("toks").cast("int").alias("n_tokens")
     )

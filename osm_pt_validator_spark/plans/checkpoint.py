@@ -1,12 +1,16 @@
-"""Per-stage checkpoint / resume with per-partition lineage + metrics.
+"""Per-stage checkpoint / resume with lineage + metrics.
 
 North-rule requirement: 10^12-doc jobs must be resumable from
 checkpoints with lineage. The unit of resume is a STAGE (a materialised
-intermediate table): a stage whose `_SUCCESS` marker exists is never
-recomputed — `run_stage` short-circuits to a scan. Within a stage,
-lineage records per-partition row counts and order-insensitive
-checksums, so a resumed run can be audited against the original
-(`verify_lineage`).
+intermediate table at `<root>/<stage>`), written in ONE pass:
+`DataFrame.observe` captures the row count and an order-insensitive
+checksum while the parquet write runs, and those values go into
+`<root>/<stage>__manifest.json`. The manifest is written last (temp
+file + atomic rename), so it is the completion marker: a stage with
+both `_SUCCESS` and a manifest is never recomputed — `run_stage`
+short-circuits to a scan — while a crash between the write and the
+manifest leaves a stage that is recomputed. `verify_lineage` audits a
+materialised stage against its manifest with one aggregate.
 
 On a real deployment the checkpoint root is an Iceberg/S3 prefix; the
 mechanism below is pure Spark API and works identically on local paths.
@@ -19,38 +23,46 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-
-def _lineage_path(root: str, stage: str) -> str:
-    return os.path.join(root, f"{stage}__lineage")
 
 
 def _stage_path(root: str, stage: str) -> str:
     return os.path.join(root, stage)
 
 
+def _manifest_path(root: str, stage: str) -> str:
+    return os.path.join(root, f"{stage}__manifest.json")
+
+
 def stage_complete(root: str, stage: str) -> bool:
-    return os.path.exists(os.path.join(_stage_path(root, stage), "_SUCCESS"))
-
-
-def compute_lineage(df: DataFrame) -> DataFrame:
-    """(partition_id, rows, checksum) — checksum is an order-insensitive
-    XOR of xxhash64 over all columns: stable under row order, sensitive
-    to any value change, and overflow-free under ANSI mode."""
-    cols = [F.col(c).cast("string") for c in df.columns]
-    return (
-        df.select(
-            F.spark_partition_id().alias("partition_id"),
-            F.xxhash64(*cols).alias("h"),
-        )
-        .groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.bit_xor("h").alias("checksum"),
-        )
+    return os.path.exists(_manifest_path(root, stage)) and os.path.exists(
+        os.path.join(_stage_path(root, stage), "_SUCCESS")
     )
+
+
+def read_manifest(root: str, stage: str) -> dict:
+    with open(_manifest_path(root, stage)) as f:
+        return json.load(f)
+
+
+def _audit(columns: list[str]) -> list[Column]:
+    """rows + two order-insensitive checksums of a per-row xxhash64 over
+    every string-cast column and one isNull flag per column (xxhash64
+    skips NULLs, so without the flags a NULL moved to another column
+    hashes the same). XOR alone lets duplicate rows cancel, so the exact
+    decimal sum is recorded too (a long sum overflows under ANSI mode)."""
+    cols = [F.col(c) for c in columns]
+    h = F.xxhash64(*[c.cast("string") for c in cols], *[c.isNull() for c in cols])
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.bit_xor(h).alias("xor"),
+        F.sum(h.cast("decimal(20,0)")).alias("sum"),
+    ]
+
+
+def _ints(values: dict) -> dict:
+    return {k: None if v is None else int(v) for k, v in values.items()}
 
 
 def run_stage(
@@ -58,38 +70,32 @@ def run_stage(
     root: str,
     stage: str,
     df_fn: Callable[[], DataFrame],
-    verbose: bool = False,
 ) -> DataFrame:
     """Compute-or-resume a stage.
 
-    * resume: `_SUCCESS` present -> return the materialised scan
-      (no recompute; downstream stages read columnar parquet with
+    * resume: `_SUCCESS` and manifest present -> return the materialised
+      scan (no recompute; downstream stages read columnar parquet with
       pushdown intact).
-    * compute: materialise df_fn() to parquet, record lineage (per
-      partition) and a manifest (wall time, row count).
+    * compute: write df_fn() to parquet once, observing rows and
+      checksum during the write, then write the manifest (wall time,
+      rows, checksum) last.
     """
     path = _stage_path(root, stage)
     if stage_complete(root, stage):
         return spark.read.parquet(path)
+    manifest = _manifest_path(root, stage)
+    if os.path.exists(manifest):
+        os.remove(manifest)
 
     t0 = time.time()
     df = df_fn()
-    df.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-
-    lineage = compute_lineage(out)
-    lineage.write.mode("overwrite").parquet(_lineage_path(root, stage))
-
-    manifest = {
-        "stage": stage,
-        "seconds": round(time.time() - t0, 3),
-        "rows": out.count(),
-    }
-    with open(os.path.join(root, f"{stage}__manifest.json"), "w") as f:
-        json.dump(manifest, f)
-    if verbose:  # pragma: no cover
-        print(f"[stage {stage}] {manifest}")
-    return out
+    obs = Observation()
+    df.observe(obs, *_audit(df.columns)).write.mode("overwrite").parquet(path)
+    m = {"stage": stage, "seconds": round(time.time() - t0, 3), **_ints(obs.get)}
+    with open(manifest + ".tmp", "w") as f:
+        json.dump(m, f)
+    os.replace(manifest + ".tmp", manifest)
+    return spark.read.parquet(path)
 
 
 def stage_metrics(spark: SparkSession, root: str) -> DataFrame:
@@ -107,15 +113,11 @@ def stage_metrics(spark: SparkSession, root: str) -> DataFrame:
 
 
 def verify_lineage(spark: SparkSession, root: str, stage: str) -> bool:
-    """Audit a materialised stage against its recorded lineage: total
-    rows and the global checksum must match (partition boundaries may
-    differ after a re-read, so compare the order-insensitive totals)."""
+    """Audit a materialised stage against its manifest: one aggregate
+    over the re-read must reproduce the rows and checksums observed
+    during the write (both are order-insensitive, so partition
+    boundaries may differ after a re-read)."""
     df = spark.read.parquet(_stage_path(root, stage))
-    recorded = spark.read.parquet(_lineage_path(root, stage))
-    cur = compute_lineage(df).agg(
-        F.sum("rows").alias("rows"), F.bit_xor("checksum").alias("checksum")
-    ).collect()[0]
-    rec = recorded.agg(
-        F.sum("rows").alias("rows"), F.bit_xor("checksum").alias("checksum")
-    ).collect()[0]
-    return (cur.rows, cur.checksum) == (rec.rows, rec.checksum)
+    got = _ints(df.agg(*_audit(df.columns)).first().asDict())
+    m = read_manifest(root, stage)
+    return got == {k: m[k] for k in got}

@@ -40,11 +40,29 @@ def test_stage_checkpoint_resume_and_lineage(spark, tmp_path):
     m = {r.stage: (r.seconds, r.rows) for r in stage_metrics(spark, root).collect()}
     assert m["stage1"][1] == 1000 and m["stage1"][0] > 0
 
-    # tamper: rewrite the stage with one row missing -> lineage fails
-    spark.range(0, 999).withColumn("v", F.col("id") * 2).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(root, "stage1"))
-    assert not verify_lineage(spark, root, "stage1")
+    # tamper: rewrite each stage behind the checkpoint's back; the audit
+    # must catch every change and still pass an untouched empty stage
+    for case, rows, tampered, intact in TAMPER_CASES:
+        run_stage(spark, root, case, lambda: spark.createDataFrame(rows, "a string, b string"))
+        assert verify_lineage(spark, root, case), case
+        spark.createDataFrame(tampered, "a string, b string").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(root, case))
+        assert verify_lineage(spark, root, case) == intact, case
+
+
+# (stage, rows written by run_stage, rows overwritten behind its back,
+#  whether the audit still passes)
+TAMPER_CASES = [
+    ("drop_row", [(str(i), str(2 * i)) for i in range(1000)],
+     [(str(i), str(2 * i)) for i in range(999)], False),
+    # equal count and equal XOR: duplicate rows cancel in a bit_xor
+    ("swap_duplicate_pair", [("1", "r"), ("1", "r"), ("2", "s")],
+     [("3", "t"), ("3", "t"), ("2", "s")], False),
+    # xxhash64 skips NULLs, so only the null flags tell these apart
+    ("move_null", [(None, "a"), ("b", "c")], [("a", None), ("b", "c")], False),
+    ("empty", [], [], True),
+]
 
 
 def test_kill_and_resume_recomputes_only_missing_stage(spark, tmp_path):
@@ -73,6 +91,16 @@ def test_kill_and_resume_recomputes_only_missing_stage(spark, tmp_path):
     shutil.rmtree(os.path.join(root, "s2"))
     pipeline()
     assert calls == {"s1": 1, "s2": 2}  # s1 resumed, s2 recomputed
+
+    # simulate a crash after s2's write but before its manifest: the data
+    # and _SUCCESS exist, yet the stage must be recomputed
+    spark.range(100).withColumn("y", F.col("id") + 1).write.mode("overwrite").parquet(
+        os.path.join(root, "s2")
+    )
+    os.remove(os.path.join(root, "s2__manifest.json"))
+    assert os.path.exists(os.path.join(root, "s2", "_SUCCESS"))
+    pipeline()
+    assert calls == {"s1": 1, "s2": 3}
 
 
 def test_streaming_tile_heatmap(spark, tmp_path):

@@ -439,3 +439,26 @@ def test_zone_geometry_zero_shuffle(spark):
     )
     plan = plan_of(zone_geometry(polys))
     assert "Exchange" not in plan, plan
+
+
+def test_run_stage_single_pass(spark, tmp_path):
+    """A computing run_stage is ONE SQL execution, the parquet write: rows
+    and checksum are observed during it, so nothing reads the stage back
+    and nothing counts it."""
+    from osm_pt_validator_spark.plans.checkpoint import run_stage, stage_complete
+
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        return {e.executionId(): e.physicalPlanDescription()
+                for e in conv.asJava(store.executionsList())}
+
+    root = str(tmp_path / "ckpt")
+    before = max(executions(), default=-1)
+    run_stage(spark, root, "s", lambda: spark.range(100).withColumn("v", F.col("id") % 7))
+    assert stage_complete(root, "s")
+    new = [p for i, p in executions().items() if i > before]
+    assert len(new) == 1, new
+    assert "InsertIntoHadoopFsRelationCommand" in new[0], new[0]
+    assert f"[file:{os.path.join(root, 's')}]" not in new[0], new[0]

@@ -107,7 +107,7 @@ def test_parent_relations(spark):
     assert got == [(10, 1), (11, 1)]
 
 
-def test_job_end_to_end(spark, tmp_path):
+def test_job_end_to_end(spark, tmp_path, capsys):
     from osm_pt_validator_spark.fixtures import (
         node_rows,
         relation_row,
@@ -154,6 +154,11 @@ def test_job_end_to_end(spark, tmp_path):
     v2 = spark.read.parquet(str(out2 / "verdicts"))
     msgs = sorted(r.message for r in v2.collect())
     assert "ways are incorrectly ordered" in msgs
+    # the summary line is read from the stage manifests, not recounted
+    assert capsys.readouterr().out.splitlines()[-1] == (
+        f"relations with verdicts: {v2.select('relation_id').distinct().count()};"
+        f" verdicts: {v2.count()}"
+    )
 
 
 def _write_tables(spark, tables, rels, extra_nodes=None):

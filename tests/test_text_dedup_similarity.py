@@ -909,11 +909,10 @@ def test_bpe_merges_vs_python_replay(spark):
     assert any("_" in l or "_" in r for _, l, r, _ in got[1:])
 
 
-def test_bpe_apply_vs_python_replay_both_methods(spark):
-    """bpe_apply (expr and arrow methods) must equal a pure-Python
-    greedy replay of the trained merge rules — and equal the trainer's
-    own final corpus state (rules were derived from exactly these
-    rewrites)."""
+def test_bpe_apply_vs_python_replay(spark):
+    """bpe_apply must equal a pure-Python greedy replay of the trained
+    merge rules — and equal the trainer's own final corpus state (rules
+    were derived from exactly these rewrites)."""
     import re
 
     from osm_pt_validator_spark.operators.text import bpe_apply, bpe_merges
@@ -944,14 +943,11 @@ def test_bpe_apply_vs_python_replay_both_methods(spark):
             toks = out
         want[did] = toks
 
-    for method in ("expr", "arrow"):
-        got = {
-            r.doc_id: (list(r.toks), r.n_tokens)
-            for r in bpe_apply(docs, merges, method=method).collect()
-        }
-        assert set(got) == set(want), method
-        for did in want:
-            assert got[did] == (want[did], len(want[did])), (method, did)
+    got = {
+        r.doc_id: (list(r.toks), r.n_tokens)
+        for r in bpe_apply(docs, merges).collect()
+    }
+    assert got == {did: (toks, len(toks)) for did, toks in want.items()}
     # merged symbols actually appear in the tokenized corpus
     assert any("_" in t for t in want[1])
 
