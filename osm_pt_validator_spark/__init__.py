@@ -13,7 +13,7 @@ Design rules (enforced in code review + tests):
   * DataFrame/SQL only — no RDDs.
   * No per-row Python UDFs (``pyspark.sql.functions.udf``); the only
     Python on the hot path is Arrow-batched (`pandas_udf`,
-    `applyInPandas`, `mapInPandas`).
+    `applyInPandas`, `mapInPandas`, `arrow_udf`, `mapInArrow`).
   * Every shuffle is deliberate: broadcast small dims, salt hot keys,
     let AQE re-plan at runtime.
 """

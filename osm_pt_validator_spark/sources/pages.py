@@ -2,13 +2,14 @@
 
 The `pages` table is the engine's 100 TB-scale fact input
 (url, warc_ts, html, text, lang — BASELINE input_hint). Two Arrow
-pandas operators derive everything else:
+operators derive everything else, each one precompiled-regex pass per
+row over the Arrow batch:
 
-  * G1 `extract_text_udf` — BINARY html -> STRING text. Deterministic
-    and **byte-identical per url** (the north-rule invariant): pandas
-    `.str` pipeline only, no per-row Python, no locale/time dependence.
+  * G1 `extract_text_udf` — BINARY html -> STRING text via an
+    `arrow_udf`. Deterministic and **byte-identical per url** (the
+    north-rule invariant): no locale/time dependence.
   * G2 `extract_mentions` — text -> exploded geocoded mention rows via
-    one `mapInPandas` (regex extractall, vectorized).
+    one `mapInArrow`.
 
 Mention grammar (produced by our deterministic synthetic pages and any
 conformant upstream extractor):
@@ -19,44 +20,52 @@ Scale notes: both operators are per-row-independent map work — no
 shuffle, pipelined with the parquet/Iceberg scan; column pruning means
 the (huge) html column is only read when G1 actually runs.
 
-Measured (sf0.1, 600k pages, 8 pinned cores): the Arrow path beats the
-pure-JVM alternative — G2 via pandas ``extractall`` 8.8 s vs 16.6 s for
-``regexp_extract_all``×4-groups + ``arrays_zip`` + ``posexplode`` (the
-JVM evaluates the regex once per group and regex exec doesn't codegen),
-and G1 ties JVM ``array_join(regexp_extract_all(...))`` (5.2 vs
-5.9 s) while also demonstrating the mandated BINARY→STRING Arrow
-boundary. Byte-identity of the two G1 paths is what makes the DuckDB
-oracle able to replay extraction in SQL.
+Why Python at all: the JVM alternative for G2
+(``regexp_extract_all`` × 4 groups + ``arrays_zip`` + ``posexplode``)
+evaluates the regex once per group and regex exec does not codegen.
+Byte-identity with JVM/DuckDB ``regexp_extract_all`` is what lets the
+DuckDB oracle replay extraction in SQL.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.functions import arrow_udf
 
-_P_RE = r"<p>(.*?)</p>"
+_P_RX = re.compile(r"<p>(.*?)</p>")
 
-_MENTION_RE = (
-    r"(?P<kind>STOP|ROUTE):(?P<entity_id>\d+)"
-    r"(?:@(?P<lat>-?\d+\.\d+),(?P<lon>-?\d+\.\d+))?"
-)
+_MENTION_RX = re.compile(r"(STOP|ROUTE):(\d+)(?:@(-?\d+\.\d+),(-?\d+\.\d+))?")
+
+_KIND = {"STOP": "stop", "ROUTE": "route"}
 
 
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
+def _paragraphs(html: bytes | None) -> str | None:
+    """G1 kernel: '\\n'.join of the <p>…</p> bodies in document order;
+    NULL html gives NULL text."""
+    if html is None:
+        return None
+    return "\n".join(_P_RX.findall(html.decode("utf-8")))
+
+
+def _text_batch(html: pa.Array) -> pa.Array:
+    return pa.array([_paragraphs(h) for h in html.to_pylist()], pa.string())
+
+
+def extract_text_udf(html: Column) -> Column:
     """G1: paragraph text extraction, byte-identical per url.
 
-    Contract: text = '\\n'.join of <p>…</p> bodies in document order.
-    The whole batch runs through pandas str ops (C loops), never
-    row-at-a-time Python.
+    The UDF is built on each call, against the active SparkContext: a
+    UDF object caches its JVM function, which holds the context it was
+    first used with, so a module-level one breaks after a session
+    restart (tasks lose their accumulator update).
     """
-    s = html.str.decode("utf-8")
-    return s.str.findall(_P_RE).str.join("\n")
+    return arrow_udf(_text_batch, T.StringType())(html)
 
 
 def with_extracted_text(pages: DataFrame) -> DataFrame:
@@ -71,52 +80,58 @@ _MENTION_OUT_SCHEMA = (
 )
 
 
+def _mention_batches(
+    batches: Iterator[pa.RecordBatch], from_html: bool
+) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        texts = batch.column(1).to_pylist()
+        if from_html:
+            texts = map(_paragraphs, texts)
+        url, idx, kind, eid, lat, lon = [], [], [], [], [], []
+        for u, text in zip(batch.column(0).to_pylist(), texts):
+            if not text:
+                continue
+            for i, (k, e, la, lo) in enumerate(_MENTION_RX.findall(text)):
+                url.append(u)
+                idx.append(i)
+                kind.append(_KIND[k])
+                eid.append(int(e))
+                # an unmatched coordinate group is "": NULL, never NaN
+                lat.append(float(la) if la else None)
+                lon.append(float(lo) if lo else None)
+        if not url:
+            continue
+        yield pa.RecordBatch.from_pydict(
+            {
+                "url": pa.array(url, pa.string()),
+                "mention_idx": pa.array(idx, pa.int32()),
+                "kind": pa.array(kind, pa.string()),
+                "entity_id": pa.array(eid, pa.int64()),
+                "lat": pa.array(lat, pa.float64()),
+                "lon": pa.array(lon, pa.float64()),
+            }
+        )
+
+
 def extract_mentions(pages: DataFrame, from_html: bool = False) -> DataFrame:
     """G2: one row per geocoded mention, in document order.
 
-    from_html=True re-extracts text inline via the G1 pandas pipeline
-    (pipeline purity); default uses the stored text column (cheaper
-    scan — html pruned).
+    from_html=True re-extracts text inline with the G1 kernel (pipeline
+    purity); default uses the stored text column (cheaper scan — html
+    pruned).
 
     G1+G2 fusion: with from_html the text extraction runs INSIDE this
-    mapInPandas with the exact G1 pandas expressions (byte-identical
-    output — tested vs extract_text_udf), instead of a separate
-    pandas_udf stage. One Python hop instead of two: the big html
-    column crosses the Arrow boundary once and the intermediate text
-    never round-trips JVM->Python->JVM->Python.
+    mapInArrow with the same `_paragraphs` kernel as G1 (byte-identical
+    output — tested vs extract_text_udf), instead of a separate UDF
+    stage. One Python hop instead of two: the big html column crosses
+    the Arrow boundary once and the intermediate text never round-trips
+    JVM->Python->JVM->Python.
     """
-    src = (
-        pages.select("url", "html") if from_html else pages.select("url", "text")
+    src = pages.select("url", "html" if from_html else "text")
+    return src.mapInArrow(
+        lambda batches: _mention_batches(batches, from_html),
+        schema=_MENTION_OUT_SCHEMA,
     )
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if from_html:
-                text = (
-                    pdf["html"].str.decode("utf-8").str.findall(_P_RE).str.join("\n")
-                )
-            else:
-                text = pdf["text"].fillna("")
-            m = text.str.extractall(_MENTION_RE)
-            if len(m) == 0:
-                continue
-            m = m.reset_index()  # columns: level_0 (row), match, groups
-            m["url"] = pdf["url"].to_numpy()[m["level_0"].to_numpy()]
-            out = pd.DataFrame(
-                {
-                    "url": m["url"],
-                    "mention_idx": m["match"].astype("int32"),
-                    "kind": m["kind"].str.lower(),
-                    "entity_id": m["entity_id"].astype("int64"),
-                    "lat": pd.to_numeric(m["lat"], errors="coerce"),
-                    "lon": pd.to_numeric(m["lon"], errors="coerce"),
-                }
-            )
-            yield out
-
-    return src.mapInPandas(_extract, schema=_MENTION_OUT_SCHEMA)
 
 
 def read_pages(spark, path: str) -> DataFrame:

@@ -1,6 +1,6 @@
 """Discipline check (SURVEY §4.5): no row-at-a-time Python UDFs in the
 engine — every Python boundary must be Arrow-batched (pandas_udf,
-applyInPandas, mapInPandas)."""
+applyInPandas, mapInPandas, arrow_udf, mapInArrow)."""
 
 from __future__ import annotations
 
